@@ -868,7 +868,7 @@ def _t13_chunk(spark, sf_dir):
     # machine idle per write. Submitting them from a small thread pool
     # lets each write's tail back-fill the next write's tasks (FIFO
     # scheduling; job descriptions are thread-local). Measured at
-    # sf0.1: t13 build phase 3.65 s → see OPTIMIZATION_r17.md.
+    # sf0.1: t13 build phase 3.65 s → see docs/perf_decisions.md.
     # Second pass (same guide section): each thread now also CONSTRUCTS
     # its own read-back — read_training_shards reads the parquet schema
     # and runs the driver-side layout guard eagerly at call time, so

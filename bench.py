@@ -15,14 +15,21 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0)))))
+# a quarter of physical memory, between 1 and 4 GiB
+_PHYS = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+DRIVER_MEM = os.environ.get(
+    "SPARK_GRAFT_DRIVER_MEM",
+    f"{min(max(_PHYS // 4, 1 << 30), 4 << 30) >> 20}m")
 
 BENCH_QUERIES = [
     "q01_pricing_summary",   # scan-heavy aggregate (TPC-H Q1 shape)
@@ -270,11 +277,15 @@ def _settle() -> tuple[float, bool]:
 def main() -> None:
     settle_wait, settle_timeout = _settle()
     load_start = _load_stamp("START")
+    # Spark's Python workers (mapInPandas, UDFs) import the package through
+    # the PYTHONPATH the JVM inherits, not through this process's sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("datafusion-substrait-spark-bench")
         .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", DRIVER_MEM)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -75,7 +75,7 @@ def _dbl_lit(v: float) -> str:
     per-element ``F.lit`` chatter (r17: ``F.lit(list)`` builds the array
     element-by-element — 65 driver round trips per 64-dim centroid, and
     the centroid battery was over half of s3/d8's DataFrame-construction
-    time; see OPTIMIZATION_r17.md)."""
+    time; see docs/perf_decisions.md)."""
     x = float(v)
     if not math.isfinite(x):
         raise ValueError(f"non-finite plan constant {v!r}")

@@ -109,32 +109,12 @@ class _Consumer:
         # reference for the same resolution — only joins need qualified
         # resolution and they build their own __sl/__sr columns.
         self._fcols: dict[int, Column] = {}
-        self._lit_cache: dict[tuple, Column] = {}
 
     def _fcol(self, i: int) -> Column:
         c = self._fcols.get(i)
         if c is None:
             c = self._fcols[i] = F.col(f"f{int(i)}")
         return c
-
-    # literal kinds whose Column build is a pure function of (kind, value)
-    # over a hashable scalar — safe to share one Column per distinct value
-    # within a consume (r18; F.lit + cast is 2-4 round trips per call and
-    # plans repeat small literals heavily)
-    _CACHEABLE_LITS = frozenset(
-        ["boolean", "i8", "i16", "i32", "i64", "fp32", "fp64", "string",
-         "date"])
-
-    def _literal_cached(self, body: dict) -> Column:
-        kinds = [k for k in body if k != "nullable"]
-        if len(kinds) == 1 and kinds[0] in self._CACHEABLE_LITS \
-                and not isinstance(body[kinds[0]], (dict, list)):
-            key = (kinds[0], body[kinds[0]])
-            c = self._lit_cache.get(key)
-            if c is None:
-                c = self._lit_cache[key] = _literal_column(body)
-            return c
-        return _literal_column(body)
 
     def _fn_name(self, anchor: int) -> str:
         name = self.extensions.get(int(anchor))
@@ -1427,7 +1407,7 @@ class _Consumer:
             args = [self.rex(a, resolver) for a in raw]
             return ops.apply_scalar(name, args)
         if kind == "literal":
-            return self._literal_cached(body)
+            return _literal_column(body)
         if kind == "ifThen":
             return self._if_then(body, resolver)
         if kind == "cast":
@@ -1569,11 +1549,12 @@ class _Consumer:
 
 
 def _literal_py(body: dict):
-    """Bare Literal message (a virtual-table Struct field) → Python value of
-    the shape ``spark.createDataFrame`` expects for the matching type."""
+    """Bare Literal message (a virtual-table Struct field, a window
+    function's constant argument) → Python value of the shape
+    ``spark.createDataFrame`` expects for the matching type."""
     kinds = [k for k in body if k not in ("nullable", "typeVariationReference")]
     if len(kinds) != 1:
-        raise SubstraitError(f"bad virtual-table literal {body}")
+        raise SubstraitError(f"bad literal {body}")
     kind, v = kinds[0], body[kinds[0]]
     if kind == "null":
         return None
@@ -1608,7 +1589,7 @@ def _literal_py(body: dict):
         unscaled = int.from_bytes(base64.b64decode(v["value"]), "little",
                                   signed=True)
         return decimal.Decimal(unscaled).scaleb(-int(v.get("scale", 0)))
-    raise SubstraitError(f"unsupported virtual-table literal kind {kind!r}")
+    raise SubstraitError(f"unsupported literal kind {kind!r}")
 
 
 def _scalar_literal(e: dict):
@@ -1616,25 +1597,14 @@ def _scalar_literal(e: dict):
     lit = e.get("literal")
     if lit is None:
         raise SubstraitError(f"expected a literal, got {e}")
-    if "null" in lit:
-        return None
-    kind = next(iter(k for k in lit if k != "nullable"))
-    v = lit[kind]
-    if kind in ("i8", "i16", "i32", "i64"):
-        return int(v)
-    if kind in ("fp32", "fp64"):
-        return float(v)
-    if kind in ("string", "boolean"):
-        return v
-    raise SubstraitError(f"unsupported literal default {kind!r}")
+    return _literal_py(lit)
 
 
 def _int_literal(e: dict, what: str) -> int:
     lit = e.get("literal", {})
-    for k in ("i32", "i64", "i16", "i8"):
-        if k in lit:
-            return int(lit[k])
-    raise SubstraitError(f"{what} must be an integer literal, got {e}")
+    if not lit.keys() & {"i8", "i16", "i32", "i64"}:
+        raise SubstraitError(f"{what} must be an integer literal, got {e}")
+    return _literal_py(lit)
 
 
 def _frame_bound(b: dict | None, lower: bool):

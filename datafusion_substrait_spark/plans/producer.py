@@ -71,8 +71,9 @@ def _cls_fast(jobj) -> str:
     back to the reflective walk. NOT used where the value can be a case
     OBJECT (``RowFrame$``, ``IntegerType$`` …): their productPrefix drops
     the trailing ``$`` that those comparison sites pin.
-    ``tests/test_roundtrip.py::test_product_prefix_matches_simple_name``
-    pins the equality over every node of every declared query plan."""
+    ``test_batched_walk_primitives_match_reflective_walk``
+    (tests/test_roundtrip.py) pins the equality over every node of a plan
+    corpus."""
     try:
         p = jobj.productPrefix()
     except Py4JError:
@@ -86,8 +87,8 @@ def _cls_fast(jobj) -> str:
 # is appended by toString itself AFTER the name, so taking the LAST such
 # group (greedy ``.*``) decomposes unambiguously even for names that
 # themselves contain ``#7L``. Any element that does not match — or a name
-# containing the separator — makes the batch parser return None and the
-# caller falls back to the per-attribute py4j walk.
+# containing the separator — sends ``_attrs_of`` to the per-attribute py4j
+# walk.
 _ATTR_STR_RE = re.compile(r"\A(.*)#(\d+)L?\Z", re.DOTALL)
 _ATTR_SEP = ""
 
@@ -106,17 +107,23 @@ def _parse_attr_strs(s: str) -> list[tuple[str, int]] | None:
     return out
 
 
-def _ids_of(jseq) -> list[int]:
-    """exprIds of a Seq[Attribute] in 3 round trips (mkString + size +
-    parse) instead of 1 + 3 per attribute; falls back on parse failure.
-    The size cross-check closes the one silent-mis-split hazard: a name
-    CONTAINING the separator plus a ``#digits`` tail would split into
-    fragments that individually still match the attr regex — the element
-    count then disagrees with the Seq's size and the slow walk decides."""
+def _attrs_of(jseq, n: int | None = None) -> list[tuple[str, int]]:
+    """(name, exprId) of each element of a Seq[Attribute] in one mkString
+    round trip (plus one for the size when the caller does not pass ``n``)
+    instead of 1 + 4 per attribute. The size cross-check closes the one
+    silent-mis-split hazard: a name CONTAINING the separator plus a
+    ``#digits`` tail would split into fragments that individually still
+    match the attr regex — the element count then disagrees with the Seq's
+    size and the per-attribute walk decides, as it does on any render the
+    parser does not recognise."""
     parsed = _parse_attr_strs(jseq.mkString(_ATTR_SEP))
-    if parsed is not None and len(parsed) == jseq.size():
-        return [eid for _, eid in parsed]
-    return [a.exprId().id() for a in _seq(jseq)]
+    if parsed is not None and len(parsed) == (jseq.size() if n is None else n):
+        return parsed
+    return [(a.name(), a.exprId().id()) for a in _seq(jseq)]
+
+
+def _ids_of(jseq) -> list[int]:
+    return [eid for _, eid in _attrs_of(jseq)]
 
 
 def _attr_eid(e) -> int:
@@ -200,12 +207,6 @@ class _Producer:
         kind = _cls_fast(node)
         handler = getattr(self, f"_rel_{kind}", None)
         if handler is None:
-            # recheck with the reflective name before rejecting: a node
-            # whose productPrefix diverges from its class name (none known
-            # in Catalyst) must degrade to the old path, never misroute
-            kind = _cls(node)
-            handler = getattr(self, f"_rel_{kind}", None)
-        if handler is None:
             raise SubstraitError(
                 f"unsupported logical operator {kind} "
                 "(≡ producer.rs:281-285 catch-all)"
@@ -241,31 +242,18 @@ class _Producer:
     @staticmethod
     def _scan_schema(node) -> tuple[list[str], list, list[int]]:
         """(names, substrait types, exprIds) of a scan's output in ~4 round
-        trips instead of 1 + 6 per column (r18, guide §4): names+types come
-        from ONE ``schema().json()`` decoded python-side via pyspark's own
-        StructType.fromJson (simpleString computed locally), ids from ONE
-        ``output().mkString``. The parsed names must equal the schema names
-        positionally — any mismatch (exotic render, separator collision)
-        falls back to the per-attribute walk, which stays the source of
-        truth."""
-        parsed = _parse_attr_strs(node.output().mkString(_ATTR_SEP))
-        if parsed is not None:
-            try:
-                st = _sql_types.StructType.fromJson(
-                    json.loads(node.schema().json()))
-            except Exception:
-                st = None
-            if st is not None and len(st.fields) == len(parsed) and \
-                    all(f.name == n for f, (n, _) in zip(st.fields, parsed)):
-                return ([f.name for f in st.fields],
-                        [spark_type_to_substrait(f.dataType.simpleString())
-                         for f in st.fields],
-                        [eid for _, eid in parsed])
-        out = _seq(node.output())
-        return ([a.name() for a in out],
-                [spark_type_to_substrait(a.dataType().simpleString())
-                 for a in out],
-                [a.exprId().id() for a in out])
+        trips instead of 1 + 6 per column (r18, guide §4): types come from
+        ONE ``schema().json()`` decoded python-side via pyspark's own
+        StructType.fromJson (simpleString computed locally, pinned equal
+        to the JVM's per-attribute render in ``tests/test_roundtrip.py``),
+        names and ids from ``_attrs_of``."""
+        fields = _sql_types.StructType.fromJson(
+            json.loads(node.schema().json())).fields
+        attrs = _attrs_of(node.output(), len(fields))
+        return ([n for n, _ in attrs],
+                [spark_type_to_substrait(f.dataType.simpleString())
+                 for f in fields],
+                [eid for _, eid in attrs])
 
     # InternalRow accessor per Spark simpleString type (LocalRelation rows)
     _ROW_GETTERS = {
@@ -334,10 +322,8 @@ class _Producer:
         if _cls_fast(child) == "LogicalRelation" and all(
             k == "AttributeReference" for k in kinds
         ):
-            ids = _parse_attr_strs(node.projectList().mkString(_ATTR_SEP))
-            mask_ids = ([eid for _, eid in ids]
-                        if ids is not None and len(ids) == len(exprs)
-                        else [e.exprId().id() for e in exprs])
+            mask_ids = [eid for _, eid in
+                        _attrs_of(node.projectList(), len(exprs))]
             return self._rel_LogicalRelation(child, mask_ids=mask_ids)
         crel, cids = self.rel(child, _refs(node))
         out_ids = []
@@ -445,14 +431,10 @@ class _Producer:
         # re-consults the override), so the emitted tree is unchanged.
         g_attr_ids: dict[int, int] | None = None
         if all(k == "AttributeReference" for k in g_kinds):
-            gp = _parse_attr_strs(
-                node.groupingExpressions().mkString(_ATTR_SEP))
-            if gp is not None and len(gp) != len(g_exprs):
-                gp = None  # separator mis-split: the slow loop decides
-            if gp is not None:
-                g_attr_ids = {}
-                for j, (_, eid) in enumerate(gp):
-                    g_attr_ids.setdefault(eid, j)
+            g_attr_ids = {}
+            for j, (_, eid) in enumerate(
+                    _attrs_of(node.groupingExpressions(), n_g)):
+                g_attr_ids.setdefault(eid, j)
 
         def agg_override(e, kind):
             if kind == "AggregateExpression":
@@ -504,7 +486,7 @@ class _Producer:
         (e.g. as an UNPIVOT key) would misroute into the grouping-sets
         reconstruction and die in ``int()`` instead of taking the r9
         Expand lowering."""
-        out_names = [a.name() for a in _seq(ex.output())]
+        out_names = [n for n, _ in _attrs_of(ex.output())]
         if out_names.count("spark_grouping_id") != 1:
             return False
         gid_pos = out_names.index("spark_grouping_id")
@@ -534,14 +516,10 @@ class _Producer:
         """
         ex = node.child()
         rows = [_seq(r) for r in _seq(ex.projections())]
-        parsed = _parse_attr_strs(ex.output().mkString(_ATTR_SEP))
-        if parsed is not None and len(parsed) == ex.output().size():
-            out_names = [n for n, _ in parsed]
-            out_ids = [eid for _, eid in parsed]
-        else:
-            out_attrs = _seq(ex.output())
-            out_names = [a.name() for a in out_attrs]
-            out_ids = [a.exprId().id() for a in out_attrs]
+        # every projection row is as wide as the Expand's output
+        out = _attrs_of(ex.output(), len(rows[0]))
+        out_names = [n for n, _ in out]
+        out_ids = [eid for _, eid in out]
         gid_positions = [i for i, n in enumerate(out_names)
                          if n == "spark_grouping_id"]
         if len(gid_positions) != 1:

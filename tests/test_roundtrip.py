@@ -133,6 +133,27 @@ def test_null_decimal_literal(spark):
     check(spark, "SELECT o_orderkey, CAST(NULL AS BIGINT) AS nl FROM orders LIMIT 7")
 
 
+def test_float_literal_signs_and_specials(spark):
+    # ±0.0 compare equal (and hash alike) in Python, so any literal reuse
+    # keyed on the value flips the sign of one zero; the STRING casts make
+    # the sign, NaN and ±inf visible in the rows
+    df = spark.sql("""
+        SELECT CAST(l_quantity * 0.0d AS STRING) AS pz,
+               CAST(l_quantity * -0.0d AS STRING) AS nz,
+               CAST(CAST(l_quantity AS FLOAT) * 0.0f AS STRING) AS pzf,
+               CAST(CAST(l_quantity AS FLOAT) * -0.0f AS STRING) AS nzf,
+               CAST(l_quantity * CAST('NaN' AS DOUBLE) AS STRING) AS nan,
+               CAST(l_quantity * CAST('Infinity' AS DOUBLE) AS STRING) AS pinf,
+               CAST(l_quantity * CAST('-Infinity' AS DOUBLE) AS STRING) AS ninf
+        FROM lineitem
+    """)
+    back = roundtrip(df)
+    assert back.schema == df.schema
+    assert_same_result(df, back)
+    assert ("0.0", "-0.0", "0.0", "-0.0", "NaN", "Infinity", "-Infinity") \
+        in {tuple(r) for r in back.collect()}
+
+
 # --- distinct / aliases (roundtrip.rs:87-135) ------------------------------
 
 def test_select_distinct(spark):
@@ -1216,13 +1237,25 @@ def test_batched_walk_primitives_match_reflective_walk(spark):
     assert checked_nodes > 150 and checked_attrs > 40
 
 
-def test_ids_of_falls_back_on_separator_collision(spark):
+def test_ids_of_falls_back_on_separator_collision(spark, tmp_path,
+                                                  monkeypatch):
     """A column name CONTAINING the mkString separator plus a #digits
     tail mis-splits into fragments that individually match the attr
-    regex; the size cross-check must detect it and the slow per-attr
-    walk must decide (r18 review hardening)."""
+    regex; the size cross-check in ``_attrs_of`` must detect it and the
+    per-attribute walk must decide (r18 review hardening) — at every site
+    that reads an attribute Seq through it: scan schema, scan mask,
+    grouping ids and grouping sets. The per-attribute walk must also
+    produce exactly the plans the parse does, and the scan schema's
+    python-side type render must equal the JVM's per-attribute one."""
+    import __spark_entry__ as entry
     from pyspark.sql import functions as F
-    from datafusion_substrait_spark.plans.producer import _ids_of, _seq
+    from datafusion_substrait_spark.plans import producer
+    from datafusion_substrait_spark.plans.producer import (
+        _ATTR_SEP, _Producer, _attrs_of, _cls, _ids_of, _parse_attr_strs,
+        _seq)
+    from datafusion_substrait_spark.plans.types import spark_type_to_substrait
+    from datafusion_substrait_spark.sources import catalog
+    from tests.test_sql_fuzz import Gen
 
     evil = "a\x01b#3"  # separator inside the name, fake id tail
     df = spark.range(2).select(
@@ -1230,3 +1263,62 @@ def test_ids_of_falls_back_on_separator_collision(spark):
     out = df._jdf.queryExecution().optimizedPlan().output()
     want = [a.exprId().id() for a in _seq(out)]
     assert _ids_of(out) == want
+
+    # every fragment of these names matches the attr regex, so only the
+    # size check can tell a mis-split from more attributes
+    split, split2 = "k#1\x01g#2", "p#7L\x01q#9"
+    path = str(tmp_path / "collide")
+    spark.sql(f"""
+        SELECT id AS `{split2}`, id % 2 AS `{split}`, id * 1.5 AS v,
+               CAST(id AS TINYINT) AS i8, CAST(id AS SMALLINT) AS i16,
+               CAST(id AS INT) AS i32, CAST(id AS FLOAT) AS f32,
+               CAST(id AS DECIMAL(7,2)) AS dec, id > 2 AS b,
+               CAST(id AS STRING) AS s, CAST(CAST(id AS STRING) AS BINARY)
+                   AS bin,
+               date_add(DATE '2020-01-01', CAST(id AS INT)) AS d,
+               TIMESTAMP '2020-01-01 00:00:00' AS ts,
+               TIMESTAMP_NTZ '2020-01-01 00:00:00' AS tsn,
+               array(CAST(id AS INT), 1) AS arr,
+               named_struct('x', CAST(id AS INT), 'y', 'z') AS st
+        FROM range(6)
+    """).write.parquet(path)
+    catalog.register_parquet(spark, "collide", path)
+
+    scan = spark.table("collide")._jdf.queryExecution().optimizedPlan()
+    attrs = _seq(scan.output())
+    assert len(_parse_attr_strs(scan.output().mkString(_ATTR_SEP))) \
+        == len(attrs) + 2
+    assert _attrs_of(scan.output()) == \
+        [(a.name(), a.exprId().id()) for a in attrs]
+
+    collide_sqls = [
+        "SELECT * FROM collide",
+        f"SELECT `{split}`, `{split2}`, v FROM collide",
+        f"SELECT `{split}`, sum(v) AS s FROM collide GROUP BY `{split}`",
+        f"SELECT `{split}`, `{split2}`, sum(v) AS s FROM collide "
+        f"GROUP BY ROLLUP(`{split}`, `{split2}`)",
+    ]
+    for sql in collide_sqls:
+        check(spark, sql)
+
+    for name in ("collide", "region", "nation", "customer", "supplier",
+                 "part", "orders", "lineitem", "events", "documents",
+                 "embeddings"):
+        node = spark.table(name)._jdf.queryExecution().optimizedPlan()
+        assert _cls(node) == "LogicalRelation"
+        attrs = _seq(node.output())
+        assert _Producer._scan_schema(node) == (
+            [a.name() for a in attrs],
+            [spark_type_to_substrait(a.dataType().simpleString())
+             for a in attrs],
+            [a.exprId().id() for a in attrs])
+
+    declared = {"q01_pricing_summary": entry._Q01, **entry._SQL}
+    declared = [declared[n] for n in entry.queries() if n in declared]
+    assert len(declared) == 17
+    dfs = [spark.sql(s) for s in
+           declared + [Gen(seed).query() for seed in range(200)]
+           + collide_sqls]
+    parsed = [to_substrait_plan(d) for d in dfs]
+    monkeypatch.setattr(producer, "_parse_attr_strs", lambda s: None)
+    assert [to_substrait_plan(d) for d in dfs] == parsed
