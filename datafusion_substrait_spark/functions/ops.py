@@ -18,11 +18,6 @@ We implement that effective set per the SURVEY.md §2.4 table.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from datafusion_substrait_spark.plans.proto import SubstraitError
 
 # ---------------------------------------------------------------------------
@@ -85,7 +80,7 @@ CATALYST_BINARY_TO_NAME: dict[str, str] = {
     "Levenshtein": "levenshtein",   # 2-arg form (threshold form is 3-child
                                     # and fails arity cleanly)
     "Sha2": "sha2",                 # (binary, numBits-literal)
-    # 0-based array indexing. Consumed as F.get (NULL on out-of-bounds),
+    # 0-based array indexing. Consumed as get() (NULL on out-of-bounds),
     # so only the LENIENT form (failOnError=false, i.e. get()) produces
     # this name; the strict ANSI arr[i] form is rewritten by the producer
     # to strict element_at(arr, i+1) when the ordinal is a non-negative
@@ -295,7 +290,7 @@ CATALYST_HOF_TO_NAME: dict[str, str] = {
 }
 
 # lambda argument shape per HOF: {arg position: allowed n_params}. The
-# consumer validates against this BEFORE building, so a corrupted plan
+# consumer validates against this BEFORE rendering, so a corrupted plan
 # (lambda at a data position, or an arity the builder would only reject
 # later as a JVM AnalysisException) fails as a clean SubstraitError.
 HOF_LAMBDA_SHAPE: dict[str, dict[int, set[int]]] = {
@@ -312,263 +307,146 @@ HOF_LAMBDA_SHAPE: dict[str, dict[int, set[int]]] = {
     "array_sort": {1: {2}},          # comparator(l, r)
 }
 
-# consume: positional (Columns and rebuilt python lambdas, in child order)
-HOF_CONSUME: dict[str, Callable[..., Column]] = {
-    "transform": F.transform,
-    "filter": F.filter,
-    "exists": F.exists,
-    "forall": F.forall,
-    "aggregate": F.aggregate,
-    "zip_with": F.zip_with,
-    "map_filter": F.map_filter,
-    "transform_keys": F.transform_keys,
-    "transform_values": F.transform_values,
-    "map_zip_with": F.map_zip_with,
-    "array_sort": F.array_sort,
-}
-
 # ---------------------------------------------------------------------------
-# consume direction: substrait name → Column builder (≡ consumer.rs:37-71)
+# consume direction: substrait name → Spark SQL (≡ consumer.rs:37-71). The
+# consumer renders a plan to one SQL string, so each entry is
+# (SQL text, arity): a bare name renders as a call over the arguments, a
+# template fills {0}, {1}, … with the argument texts. Arity None = variadic.
 # ---------------------------------------------------------------------------
 
+# ``a div b`` with trunc-toward-zero semantics, exact over full-range int64:
+# subtracting the truncated remainder first (`%` keeps the dividend's sign,
+# exact on decimals) makes the decimal quotient mathematically integral, so
+# the division's scale-6 HALF_UP rounding can never move it (a floor/ceil of
+# the ROUNDED raw quotient is off by one whenever a/b lands within 5e-7 of an
+# integer, e.g. 1999999 div 2000000). Double division loses low bits past
+# 2^53.
+_DIV = ("CAST((CAST({0} AS DECIMAL(38,0)) - CAST({0} AS DECIMAL(38,0)) % "
+        "CAST({1} AS DECIMAL(38,0))) / CAST({1} AS DECIMAL(38,0)) AS BIGINT)")
 
-def _integral_divide(a: Column, b: Column) -> Column:
-    """``a div b`` with trunc-toward-zero semantics, exact over full-range
-    int64: subtracting the truncated remainder first (`%` keeps the
-    dividend's sign, exact on decimals) makes the decimal quotient
-    mathematically integral, so the division's scale-6 HALF_UP rounding can
-    never move it. (The previous floor/ceil of the ROUNDED raw quotient was
-    off by one whenever a/b landed within 5e-7 of an integer, e.g.
-    1999999 div 2000000 → 1 instead of 0.) Double division is no
-    alternative — it loses low bits past 2^53."""
-    al, bl = a.cast("decimal(38,0)"), b.cast("decimal(38,0)")
-    return ((al - al % bl) / bl).cast("bigint")
-
-
-SCALAR_CONSUME: dict[str, Callable[..., Column]] = {
-    "equal": lambda a, b: a == b,
-    "not_equal": lambda a, b: a != b,
-    "lt": lambda a, b: a < b,
-    "lte": lambda a, b: a <= b,
-    "gt": lambda a, b: a > b,
-    "gte": lambda a, b: a >= b,
-    "add": lambda a, b: a + b,
-    "subtract": lambda a, b: a - b,
-    "multiply": lambda a, b: a * b,
-    "divide": lambda a, b: a / b,
-    "mod": lambda a, b: a % b,
-    "div": _integral_divide,
-    "and": lambda a, b: a & b,
-    "or": lambda a, b: a | b,
-    "like": lambda a, b: F.like(a, b),
-    "starts_with": lambda a, b: F.startswith(a, b),
-    "ends_with": lambda a, b: F.endswith(a, b),
-    "contains": lambda a, b: F.contains(a, b),
-    "not_like": lambda a, b: ~F.like(a, b),
-    "regex_match": lambda a, b: F.rlike(a, b),
-    "regex_imatch": lambda a, b: F.rlike(a, F.concat(F.lit("(?i)"), b)),
-    "regex_not_match": lambda a, b: ~F.rlike(a, b),
-    "regex_not_imatch": lambda a, b: ~F.rlike(a, F.concat(F.lit("(?i)"), b)),
-    "is_distinct_from": lambda a, b: ~a.eqNullSafe(b),
-    "is_not_distinct_from": lambda a, b: a.eqNullSafe(b),
-    "bitwise_and": lambda a, b: a.bitwiseAND(b),
-    "bitwise_or": lambda a, b: a.bitwiseOR(b),
-    "bitwise_xor": lambda a, b: a.bitwiseXOR(b),
-    # call_function, not F.shiftleft/right: the python wrappers demand a
-    # plain-int bit count, but consumed plans pass it as a Column (e.g. the
-    # grouping() bit-extraction over a reconstructed grouping_id)
-    "bitwise_shift_left": lambda a, b: F.call_function("shiftleft", a, b),
-    "bitwise_shift_right": lambda a, b: F.call_function("shiftright", a, b),
-    "str_concat": lambda *args: F.concat(*args),
-    "coalesce": lambda *args: F.coalesce(*args),
-    "not": lambda a: ~a,
-    "is_null": lambda a: a.isNull(),
-    "is_not_null": lambda a: a.isNotNull(),
-    "negate": lambda a: -a,
-    "abs": lambda a: F.abs(a),
-    "floor": lambda a: F.floor(a),
-    "ceil": lambda a: F.ceil(a),
-    "sqrt": lambda a: F.sqrt(a),
-    "lower": lambda a: F.lower(a),
-    "upper": lambda a: F.upper(a),
-    "char_length": lambda a: F.length(a),
-    "year": lambda a: F.year(a),
-    "month": lambda a: F.month(a),
-    "day": lambda a: F.dayofmonth(a),
-    "md5": lambda a: F.md5(a),
-    "substring": lambda a, b, c: a.substr(b, c),
-    "greatest": lambda *args: F.greatest(*args),
-    "least": lambda *args: F.least(*args),
-    "trim": lambda a: F.trim(a),
-    "ltrim": lambda a: F.ltrim(a),
-    "rtrim": lambda a: F.rtrim(a),
-    "initcap": lambda a: F.initcap(a),
-    "bitwise_not": lambda a: F.bitwise_not(a),
-    "date_add": lambda a, b: F.date_add(a, b),
-    "date_sub": lambda a, b: F.date_sub(a, b),
-    "date_diff": lambda a, b: F.datediff(a, b),
-    "array_get": lambda a, b: F.get(a, b),  # 0-based, NULL on OOB
-    "map_get": lambda a, b: F.try_element_at(a, b),  # NULL on missing key
-    "array_contains": lambda a, b: F.array_contains(a, b),
-    "size": lambda a: F.size(a),
-    "exp": lambda a: F.exp(a),
-    "ln": lambda a: F.log(a),
-    "log10": lambda a: F.log10(a),
-    "log2": lambda a: F.log2(a),
-    "sin": lambda a: F.sin(a),
-    "cos": lambda a: F.cos(a),
-    "tan": lambda a: F.tan(a),
-    "asin": lambda a: F.asin(a),
-    "acos": lambda a: F.acos(a),
-    "atan": lambda a: F.atan(a),
-    "sinh": lambda a: F.sinh(a),
-    "cosh": lambda a: F.cosh(a),
-    "tanh": lambda a: F.tanh(a),
-    "sign": lambda a: F.signum(a),
-    "degrees": lambda a: F.degrees(a),
-    "radians": lambda a: F.radians(a),
-    "power": lambda a, b: F.pow(a, b),
-    "atan2": lambda a, b: F.atan2(a, b),
-    "hour": lambda a: F.hour(a),
-    "minute": lambda a: F.minute(a),
-    "second": lambda a: F.second(a),
-    "day_of_week": lambda a: F.dayofweek(a),
-    "day_of_year": lambda a: F.dayofyear(a),
-    "quarter": lambda a: F.quarter(a),
-    "week_of_year": lambda a: F.weekofyear(a),
-    "last_day": lambda a: F.last_day(a),
-    "add_months": lambda a, b: F.call_function("add_months", a, b),
-    # call_function for the rest: the python wrappers demand plain
-    # int/str operands (format strings, pad chars, bases, numBits), but
-    # consumed plans carry them as literal Columns — JVM-side SQL name
-    # resolution binds either
-    "trunc_date": lambda a, b: F.call_function("trunc", a, b),
-    "date_trunc": lambda a, b: F.call_function("date_trunc", a, b),
-    # r11 produce-sweep additions
-    "cbrt": lambda a: F.cbrt(a),
-    "expm1": lambda a: F.expm1(a),
-    "log1p": lambda a: F.log1p(a),
-    "rint": lambda a: F.call_function("rint", a),
-    "hypot": lambda a, b: F.hypot(a, b),
-    "bround": lambda a, b: F.call_function("bround", a, b),
-    "from_unixtime": lambda a, b: F.call_function("from_unixtime", a, b),
-    "format_string": lambda *a: F.call_function("format_string", *a),
-    "str_to_map": lambda *a: F.call_function("str_to_map", *a),
-    "regexp_instr": lambda *a: F.call_function("regexp_instr", *a),
-    "timestamp_seconds": lambda a: F.timestamp_seconds(a),
-    "timestamp_micros": lambda a: F.call_function("timestamp_micros", a),
-    "unix_date": lambda a: F.call_function("unix_date", a),
-    "date_from_unix_date": lambda a: F.call_function("date_from_unix_date", a),
-    "unix_micros": lambda a: F.call_function("unix_micros", a),
-    "monthname": lambda a: F.call_function("monthname", a),
-    "dayname": lambda a: F.call_function("dayname", a),
-    "to_unix_timestamp": lambda a, b: F.call_function("to_unix_timestamp",
-                                                      a, b),
-    "find_in_set": lambda a, b: F.call_function("find_in_set", a, b),
-    "mask": lambda *a: F.call_function("mask", *a),
-    "get_json_object": lambda a, b: F.call_function("get_json_object", a, b),
-    "date_format": lambda a, b: F.call_function("date_format", a, b),
-    "element_at": lambda a, b: F.call_function("element_at", a, b),
-    "try_element_at": lambda a, b: F.try_element_at(a, b),
-    "format_number": lambda a, b: F.call_function("format_number", a, b),
-    "unix_timestamp": lambda a, b: F.call_function("unix_timestamp", a, b),
-    "octet_length": lambda a: F.octet_length(a),
-    "bit_length": lambda a: F.bit_length(a),
-    "array_distinct": lambda a: F.array_distinct(a),
-    "array_max": lambda a: F.array_max(a),
-    "array_min": lambda a: F.array_min(a),
-    "bit_count": lambda a: F.bit_count(a),
-    "is_nan": lambda a: F.isnan(a),
-    "soundex": lambda a: F.soundex(a),
-    "regexp_extract": lambda a, b, c: F.call_function("regexp_extract", a, b, c),
-    "regexp_extract_all": lambda a, b, c:
-        F.call_function("regexp_extract_all", a, b, c),
-    "regexp_replace": lambda a, b, c, d:
-        F.call_function("regexp_replace", a, b, c, d),
-    "locate": lambda a, b, c: F.call_function("locate", a, b, c),
-    "slice": lambda a, b, c: F.call_function("slice", a, b, c),
-    "overlay": lambda a, b, c, d: F.call_function("overlay", a, b, c, d),
-    "width_bucket": lambda a, b, c, d:
-        F.call_function("width_bucket", a, b, c, d),
-    "try_add": lambda a, b: F.try_add(a, b),
-    "try_subtract": lambda a, b: F.try_subtract(a, b),
-    "try_multiply": lambda a, b: F.try_multiply(a, b),
-    "try_divide": lambda a, b: F.try_divide(a, b),
-    "try_mod": lambda a, b: F.try_mod(a, b),
-    "murmur3_hash": lambda *args: F.hash(*args),
-    "xxhash64": lambda *args: F.xxhash64(*args),
-    "map_keys": lambda a: F.map_keys(a),
-    "map_values": lambda a: F.map_values(a),
-    "flatten": lambda a: F.flatten(a),
-    "array_position": lambda a, b: F.array_position(a, b),
-    "array_remove": lambda a, b: F.array_remove(a, b),
-    "arrays_overlap": lambda a, b: F.arrays_overlap(a, b),
-    "array_union": lambda a, b: F.array_union(a, b),
-    "array_intersect": lambda a, b: F.array_intersect(a, b),
-    "array_except": lambda a, b: F.array_except(a, b),
-    "array_repeat": lambda a, b: F.array_repeat(a, b),
-    "sequence": lambda *args: F.sequence(*args),  # 2- or 3-arg (step)
-    "repeat": lambda a, b: F.call_function("repeat", a, b),
-    "instr": lambda a, b: F.call_function("instr", a, b),
-    "levenshtein": lambda a, b: F.levenshtein(a, b),
-    "sha2": lambda a, b: F.call_function("sha2", a, b),
-    "reverse": lambda a: F.reverse(a),
-    "ascii": lambda a: F.ascii(a),
-    "chr": lambda a: F.call_function("chr", a),
-    "factorial": lambda a: F.factorial(a),
-    "hex": lambda a: F.hex(a),
-    "unhex": lambda a: F.unhex(a),
-    "bin": lambda a: F.bin(a),
-    "crc32": lambda a: F.crc32(a),
-    "sha1": lambda a: F.sha1(a),
-    "lpad": lambda a, b, c: F.call_function("lpad", a, b, c),
-    "rpad": lambda a, b, c: F.call_function("rpad", a, b, c),
-    "translate": lambda a, b, c: F.call_function("translate", a, b, c),
-    "substring_index": lambda a, b, c: F.call_function("substring_index", a, b, c),
-    "conv": lambda a, b, c: F.call_function("conv", a, b, c),
-    "months_between": lambda a, b, c: F.call_function("months_between", a, b, c),
-    "replace": lambda a, b, c: F.replace(a, b, c),
-    # call_function: the F.split/F.sort_array wrappers want pattern/limit/
-    # asc as python values, but consumed plans pass everything as Columns
-    "regexp_split": lambda a, b, c: F.call_function("split", a, b, c),
-    "sort_array": lambda a, b: F.call_function("sort_array", a, b),
-    "array_join": lambda a, b: F.call_function("array_join", a, b),
-    # round's scale argument is special-cased in the consumer (needs a python
-    # int for F.round); this entry covers the scale-0 unary form
-    "round": lambda a: F.round(a),
-    # complex-type constructors: interleaved (name/key, value, …) varargs
-    "named_struct": lambda *args: F.named_struct(*args),
-    "map": lambda *args: F.create_map(*args),
+SCALAR_SQL: dict[str, tuple[str, int | None]] = {
+    "equal": ("({0} = {1})", 2),
+    "not_equal": ("(NOT ({0} = {1}))", 2),
+    "lt": ("({0} < {1})", 2),
+    "lte": ("({0} <= {1})", 2),
+    "gt": ("({0} > {1})", 2),
+    "gte": ("({0} >= {1})", 2),
+    "add": ("({0} + {1})", 2),
+    "subtract": ("({0} - {1})", 2),
+    "multiply": ("({0} * {1})", 2),
+    "divide": ("({0} / {1})", 2),
+    "mod": ("({0} % {1})", 2),
+    "div": (_DIV, 2),
+    "and": ("({0} AND {1})", 2),
+    "or": ("({0} OR {1})", 2),
+    "like": ("({0} LIKE {1})", 2),
+    "starts_with": ("startswith", 2),
+    "ends_with": ("endswith", 2),
+    "contains": ("contains", 2),
+    "not_like": ("(NOT ({0} LIKE {1}))", 2),
+    "regex_match": ("({0} RLIKE {1})", 2),
+    "regex_imatch": ("({0} RLIKE concat('(?i)', {1}))", 2),
+    "regex_not_match": ("(NOT ({0} RLIKE {1}))", 2),
+    "regex_not_imatch": ("(NOT ({0} RLIKE concat('(?i)', {1})))", 2),
+    "is_distinct_from": ("(NOT ({0} <=> {1}))", 2),
+    "is_not_distinct_from": ("({0} <=> {1})", 2),
+    "bitwise_and": ("({0} & {1})", 2),
+    "bitwise_or": ("({0} | {1})", 2),
+    "bitwise_xor": ("({0} ^ {1})", 2),
+    "bitwise_shift_left": ("shiftleft", 2),
+    "bitwise_shift_right": ("shiftright", 2),
+    "str_concat": ("concat", None),
+    "coalesce": ("coalesce", None),
+    "not": ("(NOT {0})", 1),
+    "is_null": ("({0} IS NULL)", 1),
+    "is_not_null": ("({0} IS NOT NULL)", 1),
+    "negate": ("(- {0})", 1),
+    "bitwise_not": ("(~ {0})", 1),
+    "char_length": ("length", 1),
+    "day": ("dayofmonth", 1),
+    "substring": ("substring", 3),
+    "greatest": ("greatest", None),
+    "least": ("least", None),
+    "concat_ws": ("concat_ws", None),  # separator literal checked on consume
+    "date_diff": ("datediff", 2),
+    "array_get": ("get", 2),               # 0-based, NULL on OOB
+    "map_get": ("try_element_at", 2),      # NULL on missing key
+    "ln": ("ln", 1),
+    "sign": ("signum", 1),
+    "power": ("power", 2),
+    "day_of_week": ("dayofweek", 1),
+    "day_of_year": ("dayofyear", 1),
+    "week_of_year": ("weekofyear", 1),
+    "trunc_date": ("trunc", 2),
+    "is_nan": ("isnan", 1),
+    "murmur3_hash": ("hash", None),
+    "regexp_split": ("split", 3),
+    "round": ("round", 1),  # the 2-arg form takes a literal scale (consumer)
+    "named_struct": ("named_struct", None),  # interleaved (name, value, …)
+    "map": ("map", None),                    # interleaved (key, value, …)
+    "xxhash64": ("xxhash64", None),
+    "sequence": ("sequence", None),          # 2- or 3-arg (step)
+    "format_string": ("format_string", None),
+    "str_to_map": ("str_to_map", None),
+    "regexp_instr": ("regexp_instr", None),
+    "mask": ("mask", None),
 }
+
+# the rest share Spark's SQL spelling, by arity
+for _arity, _names in {
+    1: ("abs", "floor", "ceil", "sqrt", "lower", "upper", "year", "month",
+        "md5", "trim", "ltrim", "rtrim", "initcap", "size", "exp", "log10",
+        "log2", "sin", "cos", "tan", "asin", "acos", "atan", "sinh", "cosh",
+        "tanh", "degrees", "radians", "hour", "minute", "second", "quarter",
+        "last_day", "cbrt", "expm1", "log1p", "rint", "timestamp_seconds",
+        "timestamp_micros", "unix_date", "date_from_unix_date",
+        "unix_micros", "monthname", "dayname", "octet_length", "bit_length",
+        "array_distinct", "array_max", "array_min", "bit_count", "soundex",
+        "map_keys", "map_values", "flatten", "reverse", "ascii", "chr",
+        "factorial", "hex", "unhex", "bin", "crc32", "sha1"),
+    2: ("date_add", "date_sub", "array_contains", "atan2", "add_months",
+        "date_trunc", "hypot", "bround", "from_unixtime", "to_unix_timestamp",
+        "find_in_set", "get_json_object", "date_format", "element_at",
+        "try_element_at", "format_number", "unix_timestamp", "try_add",
+        "try_subtract", "try_multiply", "try_divide", "try_mod",
+        "array_position", "array_remove", "arrays_overlap", "array_union",
+        "array_intersect", "array_except", "array_repeat", "repeat", "instr",
+        "levenshtein", "sha2", "sort_array", "array_join"),
+    3: ("regexp_extract", "regexp_extract_all", "locate", "slice", "lpad",
+        "rpad", "translate", "substring_index", "conv", "months_between",
+        "replace"),
+    4: ("regexp_replace", "overlay", "width_bucket"),
+}.items():
+    for _n in _names:
+        SCALAR_SQL[_n] = (_n, _arity)
 
 # Foreign-producer compatibility alias: the reference's PRODUCER emits the
 # typo "substract" (producer.rs:297) that even its own consumer rejects
 # (name_to_op only knows "subtract", consumer.rs:46) — the documented
 # roundtrip-breaking asymmetry. We PRODUCE the spec spelling, but a plan
 # produced by the reference must still consume here.
-SCALAR_CONSUME["substract"] = SCALAR_CONSUME["subtract"]
-
-# concat_ws is NOT here: the consumer special-cases it (separator must be
-# a python str for F.concat_ws) before apply_scalar is ever reached
-_VARARG = {"str_concat", "coalesce", "greatest", "least", "named_struct",
-           "map", "murmur3_hash", "xxhash64", "sequence",
-           "format_string", "str_to_map", "regexp_instr", "mask"}
+SCALAR_SQL["substract"] = SCALAR_SQL["subtract"]
 
 
-def apply_scalar(name: str, args: list[Column]) -> Column:
-    fn = SCALAR_CONSUME.get(name)
-    if fn is None:
+def scalar_sql(name: str, args: list[str]) -> str:
+    entry = SCALAR_SQL.get(name)
+    if entry is None:
         raise SubstraitError(f"unknown scalar function {name!r} (≡ consumer.rs:69)")
-    if name not in _VARARG:
-        import inspect
-
-        expected = len(inspect.signature(fn).parameters)
-        if len(args) != expected:
-            raise SubstraitError(
-                f"scalar function {name!r} expects {expected} args, got {len(args)} "
-                "(reference asserts arity 2, consumer.rs:531; we report instead)"
-            )
-    return fn(*args)
+    text, arity = entry
+    if arity is not None and len(args) != arity:
+        raise SubstraitError(
+            f"scalar function {name!r} expects {arity} args, got {len(args)} "
+            "(reference asserts arity 2, consumer.rs:531; we report instead)"
+        )
+    if "{" in text:
+        # positional fill by concatenation: argument text may hold braces
+        out, rest = [], text
+        while "{" in rest:
+            head, _, tail = rest.partition("{")
+            idx, _, rest = tail.partition("}")
+            out += [head, args[int(idx)]]
+        return "".join(out) + rest
+    return f"{text}({', '.join(args)})"
 
 
 # ---------------------------------------------------------------------------
@@ -605,40 +483,51 @@ CATALYST_AGG_TO_NAME: dict[str, str] = {
     "last_value": "last_value",
 }
 
-# consume: substrait name → (plain builder, distinct builder | None)
-AGG_CONSUME: dict[str, Callable[..., Column]] = {
-    "count": F.count,
-    "sum": F.sum,
-    "avg": F.avg,
-    "mean": F.avg,
-    "min": F.min,
-    "max": F.max,
-    "median": F.median,
-    "approx_distinct": F.approx_count_distinct,
-    "array_agg": F.collect_list,
-    "var": F.var_samp,
-    "variance": F.var_samp,
-    "var_pop": F.var_pop,
-    "stddev": F.stddev_samp,
-    "stddev_samp": F.stddev_samp,
-    "stddev_pop": F.stddev_pop,
-    "covar": F.covar_samp,
-    "covariance": F.covar_samp,
-    "covar_pop": F.covar_pop,
-    "corr": F.corr,
-    "approx_percentile_cont": F.percentile_approx,
-    "percentile": F.percentile,
-    "approx_median": lambda c: F.percentile_approx(c, 0.5),
-    "grouping": F.grouping,
-    "first_value": lambda c: F.first(c, ignorenulls=False),
-    "last_value": lambda c: F.last(c, ignorenulls=False),
+# consume: substrait name → Spark SQL aggregate (a template fills {0})
+AGG_SQL: dict[str, str] = {
+    "count": "count",
+    "sum": "sum",
+    "avg": "avg",
+    "mean": "avg",
+    "min": "min",
+    "max": "max",
+    "median": "median",
+    "approx_distinct": "approx_count_distinct",
+    "array_agg": "collect_list",
+    "var": "var_samp",
+    "variance": "var_samp",
+    "var_pop": "var_pop",
+    "stddev": "stddev_samp",
+    "stddev_samp": "stddev_samp",
+    "stddev_pop": "stddev_pop",
+    "covar": "covar_samp",
+    "covariance": "covar_samp",
+    "covar_pop": "covar_pop",
+    "corr": "corr",
+    "approx_percentile_cont": "percentile_approx",
+    "percentile": "percentile",
+    "approx_median": "percentile_approx({0}, 0.5)",
+    "grouping": "grouping",
+    # ignoreNulls stays false, the SQL default (the producer fences true)
+    "first_value": "first",
+    "last_value": "last",
 }
 
-# distinct variants with native Spark support; anything else goes through the
-# consumer's precompute-then-``F.expr("fn(DISTINCT col)")`` fallback.
-AGG_CONSUME_DISTINCT: dict[str, Callable[..., Column]] = {
-    "count": F.count_distinct,
-    "sum": F.sum_distinct,
-    "min": F.min,   # DISTINCT is a no-op for min/max
-    "max": F.max,
-}
+# aggregates that take DISTINCT (count over any arity, the rest over one
+# argument); DISTINCT is a no-op for min/max
+AGG_DISTINCT = frozenset((
+    "count", "sum", "min", "max", "avg", "mean", "median", "approx_distinct",
+    "array_agg", "var", "variance", "var_pop", "stddev", "stddev_samp",
+    "stddev_pop"))
+
+
+def agg_sql(name: str, args: list[str], distinct: bool) -> str:
+    fn = AGG_SQL.get(name)
+    if fn is None:
+        raise SubstraitError(
+            f"unknown aggregate function {name!r} (≡ consumer.rs:401-407)")
+    if "{0}" in fn:
+        return fn.replace("{0}", args[0] if args else "")
+    if name == "count" and not args:
+        return "count(*)"
+    return f"{fn}({'DISTINCT ' if distinct else ''}{', '.join(args)})"

@@ -9,11 +9,18 @@ already-seen name returns its existing anchor (pinned by the reference test
 from __future__ import annotations
 
 from datafusion_substrait_spark.plans import proto
+from datafusion_substrait_spark.plans.types import USER_TYPE_ANCHORS
 
 
 class ExtensionRegistry:
     def __init__(self) -> None:
         self._anchor_by_name: dict[str, int] = {}
+        self._type_anchor_by_name: dict[str, int] = {}
+
+    def register_type(self, name: str) -> None:
+        """Declare a user-defined type under its fixed anchor
+        (``USER_TYPE_ANCHORS``; type anchors are their own namespace)."""
+        self._type_anchor_by_name[name] = USER_TYPE_ANCHORS[name]
 
     def register(self, name: str) -> int:
         """Return the anchor for ``name``, assigning the next one on first use
@@ -27,6 +34,9 @@ class ExtensionRegistry:
         return [
             proto.extension_function(anchor, name)
             for name, anchor in sorted(self._anchor_by_name.items(), key=lambda kv: kv[1])
+        ] + [
+            proto.extension_type(anchor, name)
+            for name, anchor in sorted(self._type_anchor_by_name.items())
         ]
 
     def names(self) -> list[str]:

@@ -29,7 +29,9 @@ from datafusion_substrait_spark.functions import ops
 from datafusion_substrait_spark.functions.registry import ExtensionRegistry
 from datafusion_substrait_spark.plans import proto
 from datafusion_substrait_spark.plans.proto import NO_LIMIT, SubstraitError
-from datafusion_substrait_spark.plans.types import spark_type_to_substrait
+from datafusion_substrait_spark.plans.types import (VOID_TYPE_NAME,
+                                                    holds_user_type,
+                                                    spark_type_to_substrait)
 from datafusion_substrait_spark.sources import catalog
 
 _DECIMAL_RE = re.compile(r"^decimal\((\d+),\s*(-?\d+)\)$")
@@ -193,6 +195,15 @@ class _Producer:
         # (depth, index) against this stack
         self._lambda_stack: list[list[int]] = []
 
+    def _type(self, simple_string: str) -> dict:
+        """``spark_type_to_substrait`` that declares ``spark:void`` in the
+        plan's extensions when the returned type holds it (the only
+        user-defined type the producer makes)."""
+        t = spark_type_to_substrait(simple_string)
+        if holds_user_type(t):
+            self.registry.register_type(VOID_TYPE_NAME)
+        return t
+
     def _fresh_id(self) -> int:
         self._sentinel -= 1
         return self._sentinel
@@ -239,8 +250,7 @@ class _Producer:
             out_ids = list(mask_ids)
         return proto.read_rel(table_names, base_names, base_types, mask), out_ids
 
-    @staticmethod
-    def _scan_schema(node) -> tuple[list[str], list, list[int]]:
+    def _scan_schema(self, node) -> tuple[list[str], list, list[int]]:
         """(names, substrait types, exprIds) of a scan's output in ~4 round
         trips instead of 1 + 6 per column (r18, guide §4): types come from
         ONE ``schema().json()`` decoded python-side via pyspark's own
@@ -251,8 +261,7 @@ class _Producer:
             json.loads(node.schema().json())).fields
         attrs = _attrs_of(node.output(), len(fields))
         return ([n for n, _ in attrs],
-                [spark_type_to_substrait(f.dataType.simpleString())
-                 for f in fields],
+                [self._type(f.dataType.simpleString()) for f in fields],
                 [eid for _, eid in attrs])
 
     # InternalRow accessor per Spark simpleString type (LocalRelation rows)
@@ -280,7 +289,7 @@ class _Producer:
         out = _seq(node.output())
         names = [a.name() for a in out]
         dts = [a.dataType().simpleString() for a in out]
-        types = [spark_type_to_substrait(dt) for dt in dts]
+        types = [self._type(dt) for dt in dts]
         rows = []
         for jrow in _seq(node.data()):
             row = []
@@ -1253,13 +1262,13 @@ class _Producer:
                 )
             return proto.cast(
                 self.rex(e.child(), input_ids),
-                spark_type_to_substrait(dt),
+                self._type(dt),
                 safe=safe,
             )
         if kind == "CheckOverflow":  # decimal-arithmetic guard → explicit cast
             return proto.cast(
                 self.rex(e.child(), input_ids),
-                spark_type_to_substrait(e.dataType().simpleString()),
+                self._type(e.dataType().simpleString()),
             )
         if kind in ("KnownFloatingPointNormalized", "NormalizeNaNAndZero",
                     "PromotePrecision", "KnownNotNull",
@@ -1580,7 +1589,7 @@ class _Producer:
                 return proto.if_then(
                     [
                         (proto.scalar_function(reg("is_null"), [arr]),
-                         proto.null_literal(spark_type_to_substrait(
+                         proto.null_literal(self._type(
                              e.dataType().simpleString()))),
                         (proto.scalar_function(reg("gte"), [
                             proto.scalar_function(reg("size"), [arr]),
@@ -1649,7 +1658,7 @@ class _Producer:
         dt = e.dataType().simpleString()
         v = e.value()
         if v is None:
-            return proto.null_literal(spark_type_to_substrait(dt))
+            return proto.null_literal(self._type(dt))
         if dt.startswith("array<") and dt.endswith(">"):
             # constant-folded array literal (e.g. array('x') under concat)
             # → Expression.Nested.List of element literals; ArrayData
@@ -1671,7 +1680,7 @@ class _Producer:
                     "empty array literal has no element to carry its type "
                     "through Nested.List; rewrite without the fold")
             return proto.nested_list([
-                proto.null_literal(spark_type_to_substrait(inner))
+                proto.null_literal(self._type(inner))
                 if v.isNullAt(i) else self._literal_value(getter(v, i), inner)
                 for i in range(v.numElements())
             ])
@@ -1679,7 +1688,7 @@ class _Producer:
 
     def _literal_value(self, v, dt: str) -> dict:
         if v is None:
-            return proto.null_literal(spark_type_to_substrait(dt))
+            return proto.null_literal(self._type(dt))
         if dt == "tinyint":
             return proto.literal("i8", int(v))
         if dt == "smallint":
@@ -1713,7 +1722,9 @@ class _Producer:
                 # org.apache.spark.sql.types.Decimal → java BigDecimal, which
                 # py4j auto-converts to python decimal.Decimal
                 v = v.toJavaBigDecimal()
-            unscaled = int(decimal.Decimal(v).scaleb(scale))
+            # exact: the default context rounds to 28 significant digits
+            unscaled = int(decimal.Decimal(v).scaleb(
+                scale, decimal.Context(prec=80)))
             return proto.literal(
                 "decimal",
                 {

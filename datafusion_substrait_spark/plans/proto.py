@@ -113,6 +113,17 @@ def extension_function(anchor: int, name: str) -> dict:
     }
 
 
+def extension_type(anchor: int, name: str) -> dict:
+    """SimpleExtensionDeclaration of a user-defined type."""
+    return {
+        "extensionType": {
+            "extensionUriReference": 0,
+            "typeAnchor": anchor,
+            "name": name,
+        }
+    }
+
+
 def read_rel(table_names: list[str], base_schema_names: list[str],
              base_schema_types: list[dict] | None, mask: list[int]) -> dict:
     """ReadRel + NamedTable + projection MaskExpression (producer.rs:74-116).

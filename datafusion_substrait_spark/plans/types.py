@@ -9,6 +9,10 @@ because the driver's test tables carry timestamp and array<float> columns.
 Substrait types are dicts keyed by the proto3-JSON oneof field name, e.g.
 ``{"i64": {"nullability": ...}}`` or
 ``{"decimal": {"precision": 5, "scale": 2, "nullability": ...}}``.
+
+Spark's ``void`` (the type of an untyped NULL) has no Substrait counterpart,
+so it travels as the user-defined type ``spark:void``, declared in the
+plan's extensions under ``VOID_TYPE_ANCHOR``.
 """
 
 from __future__ import annotations
@@ -36,7 +40,6 @@ _SIMPLE_SPARK_TO_SUBSTRAIT = {
     "timestamp": "timestampTz",
     "timestamp_ntz": "timestamp",
     "interval day to second": "intervalDay",
-    "void": "string",  # untyped NULL: surface as nullable string
 }
 _SIMPLE_SUBSTRAIT_TO_SPARK = {
     "i8": "tinyint",
@@ -54,6 +57,13 @@ _SIMPLE_SUBSTRAIT_TO_SPARK = {
     "intervalDay": "interval day to second",
 }
 
+# declared user-defined types: extension name → Spark SQL type, and the
+# fixed anchor each is declared under
+VOID_TYPE_NAME = "spark:void"
+VOID_TYPE_ANCHOR = 0
+_USER_TYPES = {VOID_TYPE_NAME: "void"}
+USER_TYPE_ANCHORS = {VOID_TYPE_NAME: VOID_TYPE_ANCHOR}
+
 _DECIMAL_RE = re.compile(r"^decimal\((\d+),\s*(\d+)\)$")
 _ARRAY_RE = re.compile(r"^array<(.*)>$")
 
@@ -61,6 +71,9 @@ _ARRAY_RE = re.compile(r"^array<(.*)>$")
 def spark_type_to_substrait(simple_string: str) -> dict:
     """Spark ``DataType.simpleString()`` → Substrait type dict."""
     s = simple_string.strip()
+    if s == "void":
+        return {"userDefined": {"typeReference": VOID_TYPE_ANCHOR,
+                                "nullability": _NULLABLE}}
     if s in _SIMPLE_SPARK_TO_SUBSTRAIT:
         return {_SIMPLE_SPARK_TO_SUBSTRAIT[s]: {"nullability": _NULLABLE}}
     m = _DECIMAL_RE.match(s)
@@ -87,8 +100,32 @@ def spark_type_to_substrait(simple_string: str) -> dict:
                          "(reference fence: producer.rs:649-654)")
 
 
-def substrait_type_to_spark(t: dict) -> str:
-    """Substrait type dict → Spark SQL type string usable in ``Column.cast``."""
+def holds_user_type(t: dict) -> bool:
+    """Whether the Substrait type ``t`` holds a user-defined type at any
+    depth (list elements and struct fields included)."""
+    if "userDefined" in t:
+        return True
+    if "list" in t:
+        return holds_user_type(t["list"]["type"])
+    if "struct" in t:
+        return any(holds_user_type(ft) for ft in t["struct"]["types"])
+    return False
+
+
+def user_type_map(plan: dict) -> dict[int, str]:
+    """type anchor → name of the plan's declared extension types."""
+    out: dict[int, str] = {}
+    for decl in plan.get("extensions", []):
+        t = decl.get("extensionType")
+        if t is not None:
+            out[int(t.get("typeAnchor", 0))] = t.get("name", "")
+    return out
+
+
+def substrait_type_to_spark(t: dict,
+                            user_types: dict[int, str] | None = None) -> str:
+    """Substrait type dict → Spark SQL type string usable in ``CAST``;
+    ``user_types`` is the plan's ``user_type_map``."""
     kinds = [k for k in t if k != "nullability"]
     if len(kinds) != 1:
         raise SubstraitError(f"bad substrait type {t}")
@@ -99,12 +136,25 @@ def substrait_type_to_spark(t: dict) -> str:
     if kind == "decimal":
         return f"decimal({int(body['precision'])},{int(body.get('scale', 0))})"
     if kind == "list":
-        return f"array<{substrait_type_to_spark(body['type'])}>"
+        return f"array<{substrait_type_to_spark(body['type'], user_types)}>"
     if kind == "struct":
         fields = ",".join(
-            f"f{i}:{substrait_type_to_spark(ft)}" for i, ft in enumerate(body["types"])
+            f"f{i}:{substrait_type_to_spark(ft, user_types)}"
+            for i, ft in enumerate(body["types"])
         )
         return f"struct<{fields}>"
+    if kind == "userDefined":
+        ref = int(body.get("typeReference", 0))
+        name = (user_types or {}).get(ref)
+        if name is None:
+            raise SubstraitError(
+                f"user-defined type reference {ref} is not declared in the "
+                "plan's extensions")
+        if name not in _USER_TYPES:
+            raise SubstraitError(
+                f"user-defined type {name!r} is not consumable (known: "
+                f"{sorted(_USER_TYPES)})")
+        return _USER_TYPES[name]
     raise SubstraitError(f"unsupported substrait type kind {kind!r} "
                          "(reference fence: consumer.rs:629-632)")
 

@@ -658,6 +658,13 @@ MESSAGES: dict[str, dict[str, tuple]] = {
         "list": (27, "m:TypeList"),
         "map": (28, "m:TypeMap"),
         "timestampTz": (29, "m:TypeParam"),
+        "userDefined": (30, "m:TypeUserDefined"),
+    },
+    # type.proto Type.UserDefined (type_parameters not carried)
+    "TypeUserDefined": {
+        "typeReference": (1, "u32"),
+        "typeVariationReference": (2, "u32"),
+        "nullability": (3, "e:Nullability"),
     },
     # type.proto parameterless type payload (Boolean/I8/.../TimestampTZ)
     "TypeParam": {

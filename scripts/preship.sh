@@ -11,19 +11,21 @@
 #   2. full pytest suite
 #   3. bench.py end-to-end (rc must be 0 and output must be one JSON line
 #      with the recorded {metric,value,unit,queries,sf} schema)
+#   4. the perfbench workloads' correctness pass (every output checked
+#      against DuckDB or the direct run; `correct` true, `failed` 0)
 #
 # Usage: scripts/preship.sh  (from the repo root; exits non-zero on any
 # failure — do NOT commit a snapshot if it does).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== preship 1/4: entry-module import guard =="
+echo "== preship 1/5: entry-module import guard =="
 python3 -c "import __spark_entry__ as e; assert set(e.ORACLES) == set(e.QUERIES); assert len(e.QUERIES) <= 50; print(f'ok: {len(e.QUERIES)} entries, lockstep holds')"
 
-echo "== preship 2/4: pytest =="
+echo "== preship 2/5: pytest =="
 python3 -m pytest tests/ -q
 
-echo "== preship 3/4: scale-stress gates (r16, VERDICT r15 #6) =="
+echo "== preship 3/5: scale-stress gates (r16, VERDICT r15 #6) =="
 # Promote the two heaviest egress/dedup stress invariants into every
 # shipped round: the 10x training-shards token-stream self-check (both
 # layouts) and the minhash 10x replication exact pair count. Opt-in for
@@ -44,7 +46,7 @@ SPARK_GRAFT_STRESS=1 python3 -m pytest tests/test_scale_stress.py -q \
 # if the -k selection ever grows (review catch r16)
 grep -qE '(^|[^0-9])4 passed' "$stress_log"
 
-echo "== preship 4/4: bench (strict: a budget violation FAILS preship) =="
+echo "== preship 4/5: bench (strict: a budget violation FAILS preship) =="
 # settle gate (r13→r14): bench.py now settle-waits ITSELF (bounded,
 # stamped — see bench.py _settle), so every run that produces a record
 # is protected, including the driver's; no shell-side loop needed. The
@@ -74,5 +76,19 @@ extra = set(rec) - {'metric', 'value', 'unit', 'queries', 'sf'}
 assert not extra, f'bench JSON has unrecorded extra keys: {extra}'
 print(f\"ok: {rec['value']}s over {len(rec['queries'])} queries at sf{rec['sf']}\")
 "
+
+echo "== preship 5/5: perfbench correctness (interchange, execution) =="
+# run.py computes `correct` leaving its KNOWN_FAULTS out, so `failed` is
+# checked as well: an operation that fails in any pass fails here
+for workload in interchange execution; do
+  python3 perfbench/run.py --workload "$workload" --seed 1 --seconds 10 \
+    --trace 0 | tail -1 | python3 -c "
+import json, sys
+rec = json.loads(sys.stdin.readline())
+assert rec.get('correct') is True, f'$workload: correct is {rec.get(\"correct\")}'
+assert rec.get('failed') == 0, f'$workload: failed is {rec.get(\"failed\")}'
+print(f'ok: $workload correct, 0 failed')
+"
+done
 
 echo "== preship: ALL GREEN — safe to snapshot =="

@@ -50,6 +50,12 @@ def rows_set(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
+def schema_of(df):
+    """Column names with their Spark types (nullability left out: the
+    interchange does not carry it)."""
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
 def assert_same_result(df_direct, df_roundtripped):
     """Result-equality roundtrip check — our substitute for the reference's
     plan-string equality (tests/roundtrip.rs:247-262), per SURVEY.md §5:

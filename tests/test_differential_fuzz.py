@@ -43,7 +43,7 @@ import duckdb
 import pytest
 
 from datafusion_substrait_spark import roundtrip
-from tests.conftest import SF_DIR, rows_set
+from tests.conftest import SF_DIR, rows_set, schema_of
 
 # table -> (int cols, string cols, date col, UNIQUE order-by key tuple —
 # window ties are resolved differently per engine, so every window ORDER
@@ -553,7 +553,11 @@ _BATCH = 10
 def test_differential_values_vs_duckdb(spark, duck, start):
     for seed in range(start, min(start + _BATCH, _HI)):
         sql = DiffGen(seed).query()
-        got = rows_set(roundtrip(spark.sql(sql)))
+        direct = spark.sql(sql)
+        rt = roundtrip(direct)
+        assert schema_of(rt) == schema_of(direct), (
+            f"consumed schema differs for seed {seed}:\n{sql}")
+        got = rows_set(rt)
         want = sorted((tuple(r) for r in duck.sql(sql).fetchall()), key=repr)
         assert got == want, (
             f"value divergence vs DuckDB for seed {seed}:\n{sql}\n"

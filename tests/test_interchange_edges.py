@@ -1192,13 +1192,53 @@ def test_distinct_window_sum_avg_framed_matches_duckdb(spark):
 
     # non-numeric value set keeps a named fence (unit probe: no Substrait
     # producer will type-check sum over a string, but a hostile wire can).
-    # r17: the fold takes the probed Spark TYPE (the caller batches the
-    # schema probe per window rel), so the unit probe hands it one
-    from pyspark.sql import types as T
-
-    from datafusion_substrait_spark.plans.consumer import _Consumer
+    # The fold takes the argument's declared Substrait type, so the unit
+    # probe hands it one
+    from datafusion_substrait_spark.plans.consumer import \
+        _distinct_fold_types
     with pytest.raises(SubstraitError, match="no exact Spark rebuild"):
-        _Consumer._distinct_fold_post("sum", T.StringType())
+        _distinct_fold_types("sum", {"string": {}})
+
+
+def test_distinct_window_folds_the_declared_type(spark, tmp_path):
+    """A DISTINCT sum/avg window takes its fold type from the plan's
+    declaration. When that declaration disagrees with the table (a double
+    column declared i64, as after schema drift), the values are cast to the
+    declared type before the value set is taken, so the result is native
+    sum/avg(DISTINCT CAST(v AS BIGINT)): values and type."""
+    from datafusion_substrait_spark.sources import catalog
+    from tests.conftest import rows_set
+
+    path = str(tmp_path / "drift")
+    spark.createDataFrame(
+        [("a", 1.2), ("a", 1.7), ("a", 2.5), ("a", None), ("b", -0.5),
+         ("b", 3.0)], "g string, v double").write.parquet(path)
+    catalog.register_parquet(spark, "drift", path)
+    for fn in ("sum", "avg"):
+        plan = _poison_distinct(to_substrait_plan(spark.sql(
+            f"SELECT g, {fn}(v) OVER (PARTITION BY g) AS d FROM drift")))
+
+        def declare(node):
+            if isinstance(node, dict):
+                if "baseSchema" in node:
+                    bs = node["baseSchema"]
+                    bs["struct"]["types"][bs["names"].index("v")] = \
+                        {"i64": {"nullability": "NULLABILITY_NULLABLE"}}
+                    return True
+                return any(declare(v) for v in node.values()
+                           if isinstance(v, (dict, list)))
+            if isinstance(node, list):
+                return any(declare(v) for v in node)
+            return False
+
+        assert declare(plan)
+        got = from_substrait_plan(spark, plan)
+        want = spark.sql(
+            f"SELECT t.g, x.d FROM drift t JOIN (SELECT g, "
+            f"{fn}(DISTINCT CAST(v AS BIGINT)) AS d FROM drift GROUP BY g) "
+            "x ON t.g = x.g")
+        assert got.schema["d"].dataType == want.schema["d"].dataType, fn
+        assert rows_set(got) == rows_set(want), fn
 
 
 def test_comparison_function_sort_is_fenced(spark):

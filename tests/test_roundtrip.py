@@ -1307,7 +1307,7 @@ def test_ids_of_falls_back_on_separator_collision(spark, tmp_path,
         node = spark.table(name)._jdf.queryExecution().optimizedPlan()
         assert _cls(node) == "LogicalRelation"
         attrs = _seq(node.output())
-        assert _Producer._scan_schema(node) == (
+        assert _Producer()._scan_schema(node) == (
             [a.name() for a in attrs],
             [spark_type_to_substrait(a.dataType().simpleString())
              for a in attrs],
