@@ -2,9 +2,15 @@
 
 ≡ ``to_substrait_plan`` (producer.rs:37-62). The reference walks DataFusion's
 *optimized* ``LogicalPlan`` (it errors if column pruning hasn't run,
-producer.rs:111-115); we walk Catalyst's optimized logical plan over py4j
-(``df._jdf.queryExecution().optimizedPlan()``) so Catalyst's column pruning,
-constant folding and filter pushdown are inherited the same way.
+producer.rs:111-115); we translate Catalyst's optimized logical plan, so
+Catalyst's column pruning, constant folding and filter pushdown are inherited
+the same way.
+
+The plan is read from the JVM in one piece: ``PlanEncoder.java`` (next to
+this module, compiled once per JVM with Janino) writes the whole optimized
+plan as one JSON text, fetched in parts that each fit py4j's reply buffer.
+The translation then runs over ``_Node`` views of that text, whose accessors
+keep Catalyst's names (``node.child()``, ``e.evalContext()``).
 
 The one genuinely hard mapping (SURVEY.md §7): Substrait references columns by
 **ordinal**, Catalyst by **exprId**. Every ``_rel`` method therefore returns
@@ -19,11 +25,12 @@ from __future__ import annotations
 import base64
 import decimal
 import json
+import math
+import os
 import re
+import threading
 
-from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
-from pyspark.sql import types as _sql_types
 
 from datafusion_substrait_spark.functions import ops
 from datafusion_substrait_spark.functions.registry import ExtensionRegistry
@@ -45,106 +52,150 @@ _SORT_DIRECTIONS = {
     ("Descending", "NullsLast"): proto.SORT_DESC_NULLS_LAST,
 }
 
+
+def _day_time(t: str) -> bool:
+    """Whether a Spark type string names a day-time interval (``interval
+    day``, ``interval hour to second`` …): its values are total
+    microseconds. Year-month intervals count months; the calendar
+    ``interval`` mixes both."""
+    return t.startswith("interval ") and \
+        not t.startswith(("interval year", "interval month"))
+
+
+def _day_time_literal(total_us: int) -> dict:
+    """Literal.intervalDayToSecond of a day-time interval's total
+    microseconds: a sign-consistent (days, seconds, microseconds)."""
+    sign = -1 if total_us < 0 else 1
+    days, rem = divmod(abs(total_us), 86_400_000_000)
+    secs, us = divmod(rem, 1_000_000)
+    return {"literal": {"intervalDayToSecond": {
+        "days": sign * days, "seconds": sign * secs,
+        "microseconds": sign * us}}}
+
+
 # ---------------------------------------------------------------------------
-# py4j helpers
+# the bulk read
 # ---------------------------------------------------------------------------
 
-
-def _seq(jseq) -> list:
-    return [jseq.apply(i) for i in range(jseq.size())]
-
-
-def _opt(jopt):
-    return jopt.get() if jopt.isDefined() else None
+_ENCODER_SOURCE = os.path.join(os.path.dirname(__file__), "PlanEncoder.java")
+_encoders: dict = {}  # py4j gateway client → PlanEncoder instance
+_compile_lock = threading.Lock()
 
 
-def _cls(jobj) -> str:
-    return jobj.getClass().getSimpleName()
+def _encoder(session):
+    """The ``PlanEncoder`` of ``session``'s JVM, compiled on first use (about
+    0.3 s, once per JVM) so that it never lands in session set-up."""
+    jvm = session._jvm
+    key = jvm._gateway_client
+    enc = _encoders.get(key)
+    if enc is None:
+        with _compile_lock:
+            enc = _encoders.get(key)
+            if enc is None:
+                with open(_ENCODER_SOURCE) as fh:
+                    source = fh.read()
+                compiler = jvm.org.codehaus.janino.SimpleCompiler()
+                compiler.setParentClassLoader(
+                    jvm.org.apache.spark.util.Utils
+                    .getContextOrSparkClassLoader())
+                compiler.cook(source)
+                enc = compiler.getClassLoader().loadClass(
+                    "PlanEncoder").newInstance()
+                _encoders[key] = enc
+    return enc
 
 
-def _cls_fast(jobj) -> str:
-    """Class simple name in ONE py4j round trip (r18, guide §4 driver
-    boundary): for Scala case classes — every Catalyst plan/expression
-    node — ``productPrefix`` is compiler-generated as exactly the class's
-    simple name, and unlike ``getClass().getSimpleName()`` it returns a
-    string directly, so there is no intermediate Class proxy to call
-    through or finalize (2 round trips + 1 deferred delete → 1 round
-    trip). Non-Product objects and manual Products (empty prefix) fall
-    back to the reflective walk. NOT used where the value can be a case
-    OBJECT (``RowFrame$``, ``IntegerType$`` …): their productPrefix drops
-    the trailing ``$`` that those comparison sites pin.
-    ``test_batched_walk_primitives_match_reflective_walk``
-    (tests/test_roundtrip.py) pins the equality over every node of a plan
-    corpus."""
-    try:
-        p = jobj.productPrefix()
-    except Py4JError:
-        return _cls(jobj)
-    return p if p else _cls(jobj)
+class _Node:
+    """A plan or expression node of the dump. A constructor field reads as
+    Catalyst's accessor does (``node.projectList()``, ``getattr(node,
+    "global")()``); ``child``/``left``/``right`` are the first and second
+    children, as for Catalyst's unary and binary nodes. The encoder's
+    additions are attributes: ``kind`` (productPrefix), ``dtype`` (the
+    type's catalogString), ``eid`` (exprId), ``pretty`` (an aggregate
+    function's prettyName) and ``sem`` (equal ids ⇔ semanticEquals)."""
+
+    __slots__ = ("_d",)
+
+    def __init__(self, d: dict) -> None:
+        self._d = d
+
+    def __getattr__(self, name):
+        try:
+            v = self._d[name]
+        except KeyError:
+            raise AttributeError(
+                f"{self._d['#k']} has no field {name!r}") from None
+        return lambda: v
+
+    kind = property(lambda self: self._d["#k"])
+    dtype = property(lambda self: self._d.get("#t"))
+    eid = property(lambda self: self._d["#i"])
+    pretty = property(lambda self: self._d["#p"])
+    sem = property(lambda self: self._d.get("#s"))
+
+    def children(self) -> list:
+        return self._d.get("#c", [])
+
+    def child(self):
+        return self._d["#c"][0]
+
+    def left(self):
+        return self._d["#c"][0]
+
+    def right(self):
+        return self._d["#c"][1]
+
+    def output(self) -> list:
+        """A plan's output as [name, exprId, type] triples."""
+        return self._d["#o"]
+
+    def references(self) -> list[int]:
+        return self._d["#r"]
 
 
-# Attribute.toString is ``name#id`` with an ``L`` suffix iff the type is
-# bigint (verified on Spark 4.1.2, scratch/spike_batch_prims_r18.py; the
-# same render Spark prints in every plan dump). The trailing ``#digits[L]``
-# is appended by toString itself AFTER the name, so taking the LAST such
-# group (greedy ``.*``) decomposes unambiguously even for names that
-# themselves contain ``#7L``. Any element that does not match — or a name
-# containing the separator — sends ``_attrs_of`` to the per-attribute py4j
-# walk.
-_ATTR_STR_RE = re.compile(r"\A(.*)#(\d+)L?\Z", re.DOTALL)
-_ATTR_SEP = ""
+class _Ref:
+    __slots__ = ("i",)
+
+    def __init__(self, i: int) -> None:
+        self.i = i
 
 
-def _parse_attr_strs(s: str) -> list[tuple[str, int]] | None:
-    """``Seq[Attribute].mkString(_ATTR_SEP)`` → [(name, exprId)] or None
-    on any element that is not the pinned ``name#id[L]`` render."""
-    if s == "":
-        return []
-    out = []
-    for part in s.split(_ATTR_SEP):
-        m = _ATTR_STR_RE.match(part)
-        if m is None:
-            return None
-        out.append((m.group(1), int(m.group(2))))
-    return out
+def _resolve(v, children):
+    if isinstance(v, _Ref):
+        return children[v.i]
+    if isinstance(v, list):
+        return [_resolve(x, children) for x in v]
+    return v
 
 
-def _attrs_of(jseq, n: int | None = None) -> list[tuple[str, int]]:
-    """(name, exprId) of each element of a Seq[Attribute] in one mkString
-    round trip (plus one for the size when the caller does not pass ``n``)
-    instead of 1 + 4 per attribute. The size cross-check closes the one
-    silent-mis-split hazard: a name CONTAINING the separator plus a
-    ``#digits`` tail would split into fragments that individually still
-    match the attr regex — the element count then disagrees with the Seq's
-    size and the per-attribute walk decides, as it does on any render the
-    parser does not recognise."""
-    parsed = _parse_attr_strs(jseq.mkString(_ATTR_SEP))
-    if parsed is not None and len(parsed) == (jseq.size() if n is None else n):
-        return parsed
-    return [(a.name(), a.exprId().id()) for a in _seq(jseq)]
+def _hook(d: dict):
+    """json object hook: nodes become ``_Node`` and a field holding one of
+    the node's children (``{"#": i}``) becomes that child."""
+    if "#k" in d:
+        kids = d.get("#c")
+        if kids:
+            for k, v in d.items():
+                if k[0] != "#":
+                    d[k] = _resolve(v, kids)
+        return _Node(d)
+    if "#" in d:
+        return _Ref(d["#"])
+    return d
 
 
-def _ids_of(jseq) -> list[int]:
-    return [eid for _, eid in _attrs_of(jseq)]
+def _read(df: DataFrame) -> tuple[list[str], _Node]:
+    """(column names, optimized plan) of ``df`` in 1 + parts py4j calls."""
+    parts = _encoder(df.sparkSession).optimizedPlan(df._jdf)
+    count, _, text = parts.part(0).partition(":")
+    if int(count) > 1:
+        text += "".join(parts.part(i) for i in range(1, int(count)))
+    dump = json.loads(text, object_hook=_hook)
+    return dump["names"], dump["plan"]
 
 
-def _attr_eid(e) -> int:
-    """exprId of one Attribute/NamedExpression whose toString ends with
-    its own ``#id[L]`` render (AttributeReference, NamedLambdaVariable) —
-    1 round trip, no ExprId proxy; falls back to the 2-trip accessor."""
-    m = _ATTR_STR_RE.match(e.toString())
-    if m is not None:
-        return int(m.group(2))
-    return e.exprId().id()
-
-
-def _attr_ids(jnode) -> list[int]:
-    return _ids_of(jnode.output())
-
-
-def _refs(jnode) -> set[int]:
-    """exprIds referenced by a plan node's own expressions."""
-    return set(_ids_of(jnode.references().toSeq()))
+def _ids(attrs) -> list[int]:
+    """exprIds of an ``output()``."""
+    return [eid for _, eid, _ in attrs]
 
 
 # ---------------------------------------------------------------------------
@@ -154,11 +205,11 @@ def to_substrait_plan(df: DataFrame) -> dict:
     """DataFrame → plan dict (≡ producer.rs:37-62). Root carries the
     DataFrame's user-visible column names (RelRoot.names, producer.rs:45-50).
 
-    Spark Connect constraint: this walk needs the driver-side Catalyst
+    Spark Connect constraint: this needs the driver-side Catalyst
     optimized plan via py4j (``df._jdf``), which a Connect session's
     DataFrame does not expose — the client holds only an unresolved proto
     plan; analysis and optimization happen server-side. Rather than an
-    opaque ``AttributeError`` deep in the walk, detect Connect up front
+    opaque ``AttributeError`` deep in the read, detect Connect up front
     and raise a named error. (Round-7 feasibility spike,
     docs/spark_connect_spike.md: the client plan is UNRESOLVED — no
     schemas, no exprIds, no Catalyst rewrites — so a faithful producer
@@ -176,10 +227,10 @@ def to_substrait_plan(df: DataFrame) -> dict:
             "optimized plan to walk. Run the producer in a classic "
             "session, or serialize SQL text and produce there."
         )
+    names, plan = _read(df)
     producer = _Producer()
-    jplan = df._jdf.queryExecution().optimizedPlan()
-    rel, _ = producer.rel(jplan)
-    return proto.plan(rel, df.columns, producer.registry.declarations())
+    rel, _ = producer.rel(plan)
+    return proto.plan(rel, names, producer.registry.declarations())
 
 
 class _Producer:
@@ -215,7 +266,7 @@ class _Producer:
         reference, threaded top-down so every ReadRel gets a column-projection
         mask — the reference *requires* pruned scans (producer.rs:111-115),
         and an unpruned 100 TB scan is exactly the plan we must not emit."""
-        kind = _cls_fast(node)
+        kind = node.kind
         handler = getattr(self, f"_rel_{kind}", None)
         if handler is None:
             raise SubstraitError(
@@ -225,17 +276,17 @@ class _Producer:
         return handler(node, needed)
 
     def _rel_LogicalRelation(self, node, needed=None, mask_ids=None):
-        ct = _opt(node.catalogTable())
-        if ct is not None:
-            table_names = list(ct.identifier().unquotedString().split("."))
+        table = node.catalogTable()
+        if table is not None:
+            table_names = table.split(".")
         else:
             relation = node.relation()
-            if _cls(relation) != "HadoopFsRelation":
-                raise SubstraitError(f"unsupported relation {_cls(relation)}")
-            paths = _seq(relation.location().rootPaths())
+            if relation.kind != "HadoopFsRelation":
+                raise SubstraitError(f"unsupported relation {relation.kind}")
+            paths = relation.rootPaths()
             if len(paths) != 1:
                 raise SubstraitError("multi-path scans not nameable as NamedTable")
-            table_names = [catalog.table_name_for_path(paths[0].toString())]
+            table_names = [catalog.table_name_for_path(paths[0])]
         base_names, base_types, all_ids = self._scan_schema(node)
         if mask_ids is None and needed is not None:
             # top-down pruning: scan only the columns referenced above; keep
@@ -251,34 +302,10 @@ class _Producer:
         return proto.read_rel(table_names, base_names, base_types, mask), out_ids
 
     def _scan_schema(self, node) -> tuple[list[str], list, list[int]]:
-        """(names, substrait types, exprIds) of a scan's output in ~4 round
-        trips instead of 1 + 6 per column (r18, guide §4): types come from
-        ONE ``schema().json()`` decoded python-side via pyspark's own
-        StructType.fromJson (simpleString computed locally, pinned equal
-        to the JVM's per-attribute render in ``tests/test_roundtrip.py``),
-        names and ids from ``_attrs_of``."""
-        fields = _sql_types.StructType.fromJson(
-            json.loads(node.schema().json())).fields
-        attrs = _attrs_of(node.output(), len(fields))
-        return ([n for n, _ in attrs],
-                [self._type(f.dataType.simpleString()) for f in fields],
-                [eid for _, eid in attrs])
-
-    # InternalRow accessor per Spark simpleString type (LocalRelation rows)
-    _ROW_GETTERS = {
-        "tinyint": lambda r, i: r.getByte(i),
-        "smallint": lambda r, i: r.getShort(i),
-        "int": lambda r, i: r.getInt(i),
-        "bigint": lambda r, i: r.getLong(i),
-        "boolean": lambda r, i: r.getBoolean(i),
-        "float": lambda r, i: r.getFloat(i),
-        "double": lambda r, i: r.getDouble(i),
-        "string": lambda r, i: r.getUTF8String(i).toString(),
-        "date": lambda r, i: r.getInt(i),          # epoch days
-        "timestamp": lambda r, i: r.getLong(i),    # epoch micros
-        "timestamp_ntz": lambda r, i: r.getLong(i),
-        "binary": lambda r, i: bytes(r.getBinary(i)),
-    }
+        """(names, substrait types, exprIds) of a scan's output."""
+        out = node.output()
+        return ([n for n, _, _ in out], [self._type(t) for _, _, t in out],
+                _ids(out))
 
     def _rel_LocalRelation(self, node, needed=None):
         """Catalyst LocalRelation → ReadRel{virtualTable}. This is how
@@ -286,33 +313,13 @@ class _Producer:
         optimizes the whole branch to an EMPTY LocalRelation — found by the
         SQL fuzzer) as well as inline ``VALUES`` lists. The reference has no
         virtual-table read (consumer.rs:371-373); the Substrait spec does."""
-        out = _seq(node.output())
-        names = [a.name() for a in out]
-        dts = [a.dataType().simpleString() for a in out]
+        out = node.output()
+        dts = [t for _, _, t in out]
         types = [self._type(dt) for dt in dts]
-        rows = []
-        for jrow in _seq(node.data()):
-            row = []
-            for i, dt in enumerate(dts):
-                if jrow.isNullAt(i):
-                    row.append(proto.null_literal(types[i]))
-                    continue
-                getter = self._ROW_GETTERS.get(dt)
-                if getter is None and _DECIMAL_RE.match(dt):
-                    m = _DECIMAL_RE.match(dt)
-                    v = jrow.getDecimal(i, int(m.group(1)), int(m.group(2))) \
-                        .toJavaBigDecimal()
-                    row.append(self._literal_value(v, dt))
-                    continue
-                if getter is None:
-                    raise SubstraitError(
-                        f"LocalRelation value of type {dt!r} is not "
-                        "serializable as a virtual-table literal"
-                    )
-                row.append(self._literal_value(getter(jrow, i), dt))
-            rows.append(row)
-        return (proto.virtual_table_read_rel(names, types, rows),
-                [a.exprId().id() for a in out])
+        rows = [[self._literal_value(v, dt) for v, dt in zip(row, dts)]
+                for row in node.data()]
+        return (proto.virtual_table_read_rel([n for n, _, _ in out], types,
+                                             rows), _ids(out))
 
     def _rel_OneRowRelation(self, node, needed=None):
         # SELECT <literals> with no FROM: one zero-column row
@@ -323,51 +330,46 @@ class _Producer:
         return self.rel(node.child(), needed)
 
     def _rel_Project(self, node, needed=None):
-        exprs = _seq(node.projectList())
-        kinds = [_cls_fast(e) for e in exprs]
+        exprs = node.projectList()
         child = node.child()
         # pure column selection directly over a scan folds into the ReadRel
         # projection mask (≡ producer.rs:74-116 requiring scan projection)
-        if _cls_fast(child) == "LogicalRelation" and all(
-            k == "AttributeReference" for k in kinds
+        if child.kind == "LogicalRelation" and all(
+            e.kind == "AttributeReference" for e in exprs
         ):
-            mask_ids = [eid for _, eid in
-                        _attrs_of(node.projectList(), len(exprs))]
-            return self._rel_LogicalRelation(child, mask_ids=mask_ids)
-        crel, cids = self.rel(child, _refs(node))
+            return self._rel_LogicalRelation(
+                child, mask_ids=[e.eid for e in exprs])
+        crel, cids = self.rel(child, set(node.references()))
         out_ids = []
         expressions = []
-        for e, kind in zip(exprs, kinds):
-            expressions.append(self.rex(e, cids, kind))
-            out_ids.append(self._named_out_id(e, kind))
+        for e in exprs:
+            expressions.append(self.rex(e, cids))
+            out_ids.append(self._named_out_id(e))
         return proto.project_rel(crel, expressions), out_ids
 
-    def _named_out_id(self, e, kind: str) -> int:
-        """Output exprId for a NamedExpression slot: the attribute's own id
-        (1 round trip via the toString parse for AttributeReference, the
-        2-trip accessor for Alias whose toString renders its whole child),
-        or a fresh sentinel for anonymous expressions."""
-        if kind == "AttributeReference":
-            return _attr_eid(e)
-        if kind == "Alias":
-            return e.exprId().id()
+    def _named_out_id(self, e) -> int:
+        """Output exprId for a NamedExpression slot: the attribute's or
+        alias's own id, or a fresh sentinel for anonymous expressions."""
+        if e.kind in ("AttributeReference", "Alias"):
+            return e.eid
         return self._fresh_id()
 
     def _rel_Filter(self, node, needed=None):
         crel, cids = self.rel(
-            node.child(), needed | _refs(node) if needed is not None else None
+            node.child(),
+            needed | set(node.references()) if needed is not None else None
         )
         cond = self.rex(node.condition(), cids)
         return proto.filter_rel(crel, cond), cids
 
     def _rel_Sort(self, node, needed=None):
         crel, cids = self.rel(
-            node.child(), needed | _refs(node) if needed is not None else None
+            node.child(),
+            needed | set(node.references()) if needed is not None else None
         )
         sorts = []
-        for so in _seq(node.order()):
-            direction = _SORT_DIRECTIONS[
-                (so.direction().toString(), so.nullOrdering().toString())]
+        for so in node.order():
+            direction = _SORT_DIRECTIONS[(so.direction(), so.nullOrdering())]
             sorts.append(proto.sort_field(self.rex(so.child(), cids), direction))
         if not bool(getattr(node, "global")()):
             # sortWithinPartitions / SORT BY (and randomSplit's internal
@@ -385,10 +387,10 @@ class _Producer:
         count = node.limitExpr().value()
         inner = node.child()
         offset = 0
-        if _cls_fast(inner) == "Offset":
+        if inner.kind == "Offset":
             offset = inner.offsetExpr().value()
             inner = inner.child()
-        if _cls_fast(inner) == "LocalLimit":
+        if inner.kind == "LocalLimit":
             inner = inner.child()
         crel, cids = self.rel(inner, needed)
         return proto.fetch_rel(crel, offset, count), cids
@@ -413,7 +415,7 @@ class _Producer:
         outputs are not exactly the identity over groupings++measures — wrap
         the AggregateRel in a ProjectRel that rebuilds each Catalyst output
         over the (groupings ++ measures) ordinal space."""
-        if _cls_fast(node.child()) == "Expand" and \
+        if node.child().kind == "Expand" and \
                 self._is_grouping_sets_expand(node.child()):
             # GROUPING SETS / ROLLUP / CUBE → native multi-grouping
             # AggregateRel. An Expand that is NOT the grouping-sets shape
@@ -423,60 +425,53 @@ class _Producer:
             # produces it as UNION-ALL-of-projections under a plain
             # aggregate.
             return self._rel_Aggregate_grouping_sets(node)
-        crel, cids = self.rel(node.child(), _refs(node))
-        g_exprs = _seq(node.groupingExpressions())
-        a_exprs = _seq(node.aggregateExpressions())
-        g_kinds = [_cls_fast(g) for g in g_exprs]
-        groupings = [self.rex(g, cids, k) for g, k in zip(g_exprs, g_kinds)]
+        crel, cids = self.rel(node.child(), set(node.references()))
+        g_exprs = node.groupingExpressions()
+        a_exprs = node.aggregateExpressions()
+        groupings = [self.rex(g, cids) for g in g_exprs]
         n_g = len(g_exprs)
 
         # grouping-slot matching: when every grouping is a plain attribute
         # (the overwhelmingly common GROUP BY columns shape), attribute
         # identity IS semantic equality (AttributeReference.semanticEquals
-        # compares exprIds), so the per-node O(n_g) JVM semanticEquals loop
-        # collapses to one python dict probe on the id already parsed from
-        # toString. Aliases/strip-wrappers over a grouping attr reach the
-        # same field_ref through rex's own recursion (it unwraps them and
+        # compares exprIds), so matching is one dict probe on the exprId.
+        # Aliases/strip-wrappers over a grouping attr reach the same
+        # field_ref through rex's own recursion (it unwraps them and
         # re-consults the override), so the emitted tree is unchanged.
+        # Otherwise the encoder gave every expression of this Aggregate a
+        # semantic class id (``sem``).
         g_attr_ids: dict[int, int] | None = None
-        if all(k == "AttributeReference" for k in g_kinds):
+        if all(g.kind == "AttributeReference" for g in g_exprs):
             g_attr_ids = {}
-            for j, (_, eid) in enumerate(
-                    _attrs_of(node.groupingExpressions(), n_g)):
-                g_attr_ids.setdefault(eid, j)
+            for j, g in enumerate(g_exprs):
+                g_attr_ids.setdefault(g.eid, j)
 
-        def agg_override(e, kind):
-            if kind == "AggregateExpression":
-                if _cls_fast(e.aggregateFunction()) == "PivotFirst":
+        def agg_override(e):
+            if e.kind == "AggregateExpression":
+                if e.aggregateFunction().kind == "PivotFirst":
                     return self._lower_pivot_first(
-                        e, cids, n_g, measures, measure_nodes)
-                for idx, m in enumerate(measure_nodes):
-                    if m.semanticEquals(e):
-                        return proto.field_ref(n_g + idx)
-                measure_nodes.append(e)
-                measures.append(self._measure(e, cids))
-                return proto.field_ref(n_g + len(measures) - 1)
+                        e, cids, n_g, measures, measure_sems)
+                return self._measure_ref(e, cids, n_g, measures, measure_sems)
             if g_attr_ids is not None:
-                if kind != "AttributeReference":
+                if e.kind != "AttributeReference":
                     return None
-                j = g_attr_ids.get(_attr_eid(e))
+                j = g_attr_ids.get(e.eid)
                 return proto.field_ref(j) if j is not None else None
             for j, g in enumerate(g_exprs):
-                if g.semanticEquals(e):
+                if g.sem is not None and g.sem == e.sem:
                     return proto.field_ref(j)
             return None
 
         measures: list[dict] = []
-        measure_nodes: list = []
+        measure_sems: list = []
         out_exprs: list[dict] = []
         out_ids: list[int] = []
         prev_override = self._override
         self._override = agg_override
         try:
             for e in a_exprs:
-                kind = _cls_fast(e)
-                out_exprs.append(self.rex(e, cids, kind))
-                out_ids.append(self._named_out_id(e, kind))
+                out_exprs.append(self.rex(e, cids))
+                out_ids.append(self._named_out_id(e))
         finally:
             self._override = prev_override
 
@@ -485,6 +480,17 @@ class _Producer:
         if out_exprs != identity:
             rel = proto.project_rel(rel, out_exprs)
         return rel, out_ids
+
+    def _measure_ref(self, e, cids, n_g, measures, sems) -> dict:
+        """Field ref to the measure of AggregateExpression ``e`` in the
+        (groupings ++ measures) space; the measure is added unless a
+        semantically equal one is already there (``sems`` holds each
+        measure's semantic class, None for synthesized ones)."""
+        if e.sem in sems:
+            return proto.field_ref(n_g + sems.index(e.sem))
+        sems.append(e.sem)
+        measures.append(self._measure(e, cids))
+        return proto.field_ref(n_g + len(measures) - 1)
 
     @staticmethod
     def _is_grouping_sets_expand(ex) -> bool:
@@ -495,16 +501,15 @@ class _Producer:
         (e.g. as an UNPIVOT key) would misroute into the grouping-sets
         reconstruction and die in ``int()`` instead of taking the r9
         Expand lowering."""
-        out_names = [n for n, _ in _attrs_of(ex.output())]
+        out_names = [n for n, _, _ in ex.output()]
         if out_names.count("spark_grouping_id") != 1:
             return False
         gid_pos = out_names.index("spark_grouping_id")
-        for r in _seq(ex.projections()):
-            slot = _seq(r)[gid_pos]
-            if _cls(slot) != "Literal" or slot.value() is None:
+        for r in ex.projections():
+            slot = r[gid_pos]
+            if slot.kind != "Literal" or slot.value() is None:
                 return False
-            if str(slot.dataType().simpleString()) not in (
-                    "int", "bigint", "smallint", "tinyint"):
+            if slot.dtype not in ("int", "bigint", "smallint", "tinyint"):
                 return False
         return True
 
@@ -524,11 +529,9 @@ class _Producer:
         grouping-set-index column that rebuilds each set's bitmask.
         """
         ex = node.child()
-        rows = [_seq(r) for r in _seq(ex.projections())]
-        # every projection row is as wide as the Expand's output
-        out = _attrs_of(ex.output(), len(rows[0]))
-        out_names = [n for n, _ in out]
-        out_ids = [eid for _, eid in out]
+        rows = ex.projections()
+        out_names = [n for n, _, _ in ex.output()]
+        out_ids = _ids(ex.output())
         gid_positions = [i for i, n in enumerate(out_names)
                          if n == "spark_grouping_id"]
         if len(gid_positions) != 1:
@@ -539,21 +542,19 @@ class _Producer:
         gid_pos = gid_positions[0]
         gid_id = out_ids[gid_pos]
         g_positions: list[int] = []
-        for g in _seq(node.groupingExpressions()):
-            if _cls_fast(g) != "AttributeReference":
+        for g in node.groupingExpressions():
+            if g.kind != "AttributeReference":
                 raise SubstraitError(
                     "grouping-sets aggregate with a non-attribute grouping "
-                    f"expression {_cls(g)}"
+                    f"expression {g.kind}"
                 )
-            geid = _attr_eid(g)
-            if geid != gid_id:
-                g_positions.append(out_ids.index(geid))
+            if g.eid != gid_id:
+                g_positions.append(out_ids.index(g.eid))
 
         def is_null_slot(e) -> bool:
-            return _cls_fast(e) == "Literal" and e.value() is None
+            return e.kind == "Literal" and e.value() is None
 
-        used = {eid for r in rows for e in r
-                for eid in _ids_of(e.references().toSeq())}
+        used = {eid for r in rows for e in r for eid in e.references()}
         crel, cids = self.rel(ex.child(), used or None)
 
         g_exprs_sub: list[dict] = []
@@ -578,21 +579,17 @@ class _Producer:
 
         n_g = len(g_positions)
         measures: list[dict] = []
-        measure_nodes: list = []
-        a_exprs = _seq(node.aggregateExpressions())
+        measure_sems: list = []
+        a_exprs = node.aggregateExpressions()
         g_pos_by_id = {out_ids[j]: k for k, j in enumerate(g_positions)}
 
         def make_override(set_idx_ordinal: int | None):
-            def agg_override(e, kind):
-                if kind == "AggregateExpression":
-                    for idx, m in enumerate(measure_nodes):
-                        if m.semanticEquals(e):
-                            return proto.field_ref(n_g + idx)
-                    measure_nodes.append(e)
-                    measures.append(self._measure(e, cids))
-                    return proto.field_ref(n_g + len(measures) - 1)
-                if kind == "AttributeReference":
-                    eid = _attr_eid(e)
+            def agg_override(e):
+                if e.kind == "AggregateExpression":
+                    return self._measure_ref(e, cids, n_g, measures,
+                                             measure_sems)
+                if e.kind == "AttributeReference":
+                    eid = e.eid
                     if eid == gid_id:
                         if set_idx_ordinal is None:
                             return proto.literal("i64", 0)  # pass-1 stub
@@ -628,9 +625,8 @@ class _Producer:
         self._override = make_override(set_idx_ord)
         try:
             for e in a_exprs:
-                kind = _cls_fast(e)
-                out_exprs.append(self.rex(e, cids, kind))
-                out_ids_out.append(self._named_out_id(e, kind))
+                out_exprs.append(self.rex(e, cids))
+                out_ids_out.append(self._named_out_id(e))
         finally:
             self._override = prev_override
 
@@ -647,18 +643,21 @@ class _Producer:
         gen = node.generator()
         modes = {"Explode": "explode", "PosExplode": "posexplode",
                  "ReplicateRows": "replicaterows"}
-        mode = modes.get(_cls_fast(gen))
+        mode = modes.get(gen.kind)
         if mode is None:
             raise SubstraitError(
-                f"unsupported generator {_cls(gen)} "
+                f"unsupported generator {gen.kind} "
                 "(explode/posexplode/replicaterows only)"
             )
-        req_ids = _ids_of(node.requiredChildOutput())
+        # Catalyst's requiredChildOutput
+        unrequired = set(node.unrequiredChildIndex())
+        req_ids = [eid for i, eid in enumerate(_ids(node.child().output()))
+                   if i not in unrequired]
         child_needed = (
-            set(req_ids) | set(_ids_of(gen.references().toSeq()))
+            set(req_ids) | set(gen.references())
         ) if needed is not None else None
         crel, cids = self.rel(node.child(), child_needed)
-        gen_children = _seq(gen.children())
+        gen_children = gen.children()
         # explode: the one array argument. replicaterows (Catalyst's
         # INTERSECT/EXCEPT ALL building block): child 0 is the row
         # multiplier, children 1..N are the replicated column exprs
@@ -666,7 +665,7 @@ class _Producer:
         extra = ([self.rex(c, cids) for c in gen_children[1:]]
                  if mode == "replicaterows" else None)
         req_ordinals = [cids.index(i) for i in req_ids]
-        gen_out_ids = _ids_of(node.generatorOutput())
+        gen_out_ids = [a.eid for a in node.generatorOutput()]
         if mode == "replicaterows" and len(gen_out_ids) != len(extra or []):
             raise SubstraitError(
                 f"ReplicateRows outputs {len(gen_out_ids)} columns but has "
@@ -699,32 +698,31 @@ class _Producer:
         this — no trailing projection/trim round-trip needed.
         ``repartitionByRange`` keeps a named fence: the spec's exchange
         kinds have no range-distribution analogue."""
-        exprs = _seq(node.partitionExpressions())
-        if any(_cls_fast(e) == "SortOrder" for e in exprs):
+        exprs = node.partitionExpressions()
+        if any(e.kind == "SortOrder" for e in exprs):
             raise SubstraitError(
                 "repartitionByRange (range distribution) has no "
                 "ExchangeRel analogue in the spec's exchange kinds"
             )
-        wanted = needed | _refs(node) if needed is not None else None
+        wanted = needed | set(node.references()) if needed is not None \
+            else None
         crel, cids = self.rel(node.child(), wanted)
         fields: list = []
         for e in exprs:
-            if _cls_fast(e) == "AttributeReference":
-                eid = _attr_eid(e)
-                if eid not in cids:
+            if e.kind == "AttributeReference":
+                if e.eid not in cids:
                     # translate-or-error contract: a partition key absent
                     # from the child ordinal space must surface as
                     # SubstraitError, not a bare ValueError (mirrors
-                    # rex()'s AttributeReference handling); .toString()
-                    # because str(e) on a py4j JavaObject names no column
+                    # rex()'s AttributeReference handling)
                     raise SubstraitError(
-                        f"repartition key {e.toString()} not found in "
+                        f"repartition key {e.name()}#{e.eid} not found in "
                         "child output"
                     )
-                fields.append(cids.index(eid))
+                fields.append(cids.index(e.eid))
             else:
                 fields.append(self.rex(e, cids))
-        n = _opt(node.optNumPartitions())
+        n = node.optNumPartitions()
         return proto.exchange_rel(crel, int(n) if n is not None else 0,
                                   fields), cids
 
@@ -750,16 +748,8 @@ class _Producer:
             cids,
         )
 
-    class _NeverEqual:
-        """Placeholder in measure_nodes for synthesized (non-Catalyst)
-        measures — never deduplicated against real AggregateExpressions."""
-
-        @staticmethod
-        def semanticEquals(_other) -> bool:  # noqa: N802 (Catalyst API shape)
-            return False
-
     def _lower_pivot_first(self, agg_expr, cids, n_g, measures,
-                           measure_nodes) -> dict:
+                           measure_sems) -> dict:
         """Auto-lower Catalyst's PivotFirst (SQL PIVOT / DataFrame
         ``.pivot()``) into per-pivot-value FILTER measures — the
         reference-surface mechanism the consumer already executes
@@ -779,11 +769,11 @@ class _Producer:
         array back out of the consumed plan, leaving flat FILTER
         aggregates."""
         pf = agg_expr.aggregateFunction()
-        if agg_expr.isDistinct() or _opt(agg_expr.filter()) is not None:
+        if agg_expr.isDistinct() or agg_expr.filter() is not None:
             raise SubstraitError(
                 "pivotfirst with DISTINCT or FILTER has no lowering "
                 "(Catalyst's ResolvePivot never emits one)")
-        kids = _seq(pf.children())
+        kids = pf.children()
         if len(kids) != 2:
             # the 3-child ordered form carries an orderColumn Spark only
             # uses for struct-reassembly of multi-agg pivots pre-3.0
@@ -791,7 +781,7 @@ class _Producer:
                 f"pivotfirst with {len(kids)} children is not the "
                 "2-child (pivotColumn, valueColumn) ResolvePivot shape")
         pivot_e, value_e = kids
-        pdt = pivot_e.dataType().simpleString()
+        pdt = pivot_e.dtype
         # measure args/filters live in the input ordinal space — suspend
         # the output-space override (same rule as _measure)
         prev, self._override = self._override, None
@@ -801,11 +791,11 @@ class _Producer:
         finally:
             self._override = prev
         slot_refs = []
-        for v in _seq(pf.pivotColumnValues()):
+        for v in pf.pivotColumnValues():
             filt = proto.scalar_function(
                 self.registry.register("is_not_distinct_from"),
                 [pivot_ref, self._literal_value(v, pdt)])
-            measure_nodes.append(self._NeverEqual)
+            measure_sems.append(None)  # never deduplicated
             measures.append(proto.measure(
                 self.registry.register("max"), [value_ref],
                 filter_expr=filt))
@@ -823,7 +813,7 @@ class _Producer:
 
     def _measure_inner(self, agg_expr, cids) -> dict:
         fn = agg_expr.aggregateFunction()
-        pretty = fn.prettyName()
+        pretty = fn.pretty
         name = ops.CATALYST_AGG_TO_NAME.get(pretty)
         if name is None:
             raise SubstraitError(
@@ -839,8 +829,8 @@ class _Producer:
                 f"{pretty}(expr, ignoreNulls=true) has no Substrait encoding "
                 "in the DataFusion-15 surface; rewrite without ignoreNulls"
             )
-        args = [self.rex(c, cids) for c in _seq(fn.children())]
-        filt = _opt(agg_expr.filter())
+        args = [self.rex(c, cids) for c in fn.children()]
+        filt = agg_expr.filter()
         if pretty in ("first", "last", "first_value",
                       "last_value") and filt is not None:
             # the measure-filter consume path rewrites fn(x) FILTER (WHERE p)
@@ -873,19 +863,20 @@ class _Producer:
     }
 
     def _rel_Join(self, node, needed=None):
-        jt = node.joinType().toString()
+        jt = node.joinType()
         join_type = self._JOIN_TYPES.get(jt)
         if join_type is None:
             raise SubstraitError(f"unsupported join type {jt} (producer.rs:378-391)")
         if needed is not None:
-            wanted = needed | _refs(node)  # parent refs + ON-condition refs
-            l_needed = wanted & set(_attr_ids(node.left()))
-            r_needed = wanted & set(_attr_ids(node.right()))
+            # parent refs + ON-condition refs
+            wanted = needed | set(node.references())
+            l_needed = wanted & set(_ids(node.left().output()))
+            r_needed = wanted & set(_ids(node.right().output()))
         else:
             l_needed = r_needed = None
         l_rel, lids = self.rel(node.left(), l_needed)
         r_rel, rids = self.rel(node.right(), r_needed)
-        cond = _opt(node.condition())
+        cond = node.condition()
         # ON resolved against the combined left++right ordinal space
         # (≡ build_join_schema, consumer.rs:288-290)
         expr = (
@@ -895,44 +886,33 @@ class _Producer:
         )
         out_ids = lids if join_type in (proto.JOIN_TYPE_SEMI, proto.JOIN_TYPE_ANTI) \
             else lids + rids
+        # per-side join-strategy hints (r10): an explicit broadcast /
+        # merge / shuffle_hash / shuffle_replicate_nl hint is a plan
+        # decision the user made — dropping it silently rebuilt a shuffle
+        # join where a broadcast was demanded. The encoder writes each
+        # side's strategy name, which IS the DataFrame.hint() name on
+        # rebuild, or null
+        left_hint, right_hint = node.hint()
         return proto.join_rel(l_rel, r_rel, expr, join_type,
-                              hints=self._join_hints(node)), out_ids
-
-    @staticmethod
-    def _join_hints(node) -> tuple[str | None, str | None]:
-        """Per-side join-strategy hints (r10): an explicit broadcast /
-        merge / shuffle_hash / shuffle_replicate_nl hint is a plan
-        decision the user made — dropping it silently rebuilt a shuffle
-        join where a broadcast was demanded. Strategy.toString() IS the
-        DataFrame.hint() name on rebuild."""
-        out = []
-        jh = node.hint()
-        for side in (jh.leftHint(), jh.rightHint()):
-            name = None
-            if side.isDefined():
-                st = side.get().strategy()
-                if st.isDefined():
-                    name = str(st.get().toString())
-            out.append(name)
-        return out[0], out[1]
+                              hints=(left_hint, right_hint)), out_ids
 
     def _rel_Range(self, node, needed=None):
         """``spark.range`` / SQL range() → ExtensionLeafRel RangeRel (r10):
         four integers through the plan, zero inline data — the virtual-
         table alternative would inline end-start literal rows. numSlices
         rides only when the user pinned it."""
-        slices = _opt(node.numSlices())
+        slices = node.numSlices()
         rel = proto.range_rel(
             int(node.start()), int(node.end()), int(node.step()),
             None if slices is None else int(slices))
-        return rel, _attr_ids(node)
+        return rel, _ids(node.output())
 
     def _rel_Deduplicate(self, node, needed=None):
         # df.distinct() → AggregateRel grouping on all columns, zero measures
         # (≡ producer.rs:203-222). Optimizer usually rewrites this to
         # Aggregate already; handle the raw node for robustness.
         crel, cids = self.rel(node.child())
-        keys = _ids_of(node.keys())
+        keys = [k.eid for k in node.keys()]
         if sorted(keys) != sorted(cids):
             raise SubstraitError(
                 "dropDuplicates(subset) keeps an arbitrary row per key and has "
@@ -955,8 +935,8 @@ class _Producer:
         the id columns, so total scan BYTES match the original Expand's
         single all-columns read — and the n× row multiplication is
         identical either way."""
-        rows = [_seq(r) for r in _seq(node.projections())]
-        out_ids = _attr_ids(node)
+        rows = node.projections()
+        out_ids = _ids(node.output())
         if needed is not None:
             # push the parent's pruning through every branch (r10, ADVICE):
             # positions are aligned across projection rows, so dropping an
@@ -968,8 +948,7 @@ class _Producer:
                 or [0]
             rows = [[r[i] for i in keep] for r in rows]
             out_ids = [out_ids[i] for i in keep]
-        used = {eid for r in rows for e in r
-                for eid in _ids_of(e.references().toSeq())}
+        used = {eid for r in rows for e in r for eid in e.references()}
         crel, cids = self.rel(node.child(), used or None)
         branches = [
             proto.project_rel(crel, [self.rex(e, cids) for e in row])
@@ -986,8 +965,8 @@ class _Producer:
         # child subtree prunes itself; positional re-mapping of union
         # output ids onto per-child exprIds would duplicate that for
         # nothing.
-        rels = [self.rel(child)[0] for child in _seq(node.children())]
-        return proto.set_rel(rels, "SET_OP_UNION_ALL"), _attr_ids(node)
+        rels = [self.rel(child)[0] for child in node.children()]
+        return proto.set_rel(rels, "SET_OP_UNION_ALL"), _ids(node.output())
 
     _WINDOW_FN_NAMES = {
         "RowNumber": "row_number",
@@ -1008,14 +987,14 @@ class _Producer:
         and stacks nodes for differing specs, matching Substrait's
         one-spec-per-rel shape exactly. Output = child ++ window columns."""
         crel, cids = self.rel(
-            node.child(), needed | _refs(node) if needed is not None else None
+            node.child(),
+            needed | set(node.references()) if needed is not None else None
         )
-        part = [self.rex(p, cids) for p in _seq(node.partitionSpec())]
+        part = [self.rex(p, cids) for p in node.partitionSpec()]
         temporal_scale = self._temporal_range_scale(node)
         sorts = []
-        for so in _seq(node.orderSpec()):
-            direction = _SORT_DIRECTIONS[
-                (so.direction().toString(), so.nullOrdering().toString())]
+        for so in node.orderSpec():
+            direction = _SORT_DIRECTIONS[(so.direction(), so.nullOrdering())]
             key = self.rex(so.child(), cids)
             if temporal_scale is not None:
                 # interval RANGE lowering (r12): wrap the temporal sort key
@@ -1033,35 +1012,34 @@ class _Producer:
 
         wfs = []
         out_ids = list(cids)
-        for we in _seq(node.windowExpressions()):
-            if _cls_fast(we) != "Alias" or \
-                    _cls_fast(we.child()) != "WindowExpression":
+        for we in node.windowExpressions():
+            if we.kind != "Alias" or we.child().kind != "WindowExpression":
                 raise SubstraitError(
-                    f"unsupported window output {_cls(we)}: {we.toString()}"
+                    f"unsupported window output {we.kind}: {we.name()}"
                 )
             wexpr = we.child()
             fn = wexpr.windowFunction()
-            kind = _cls_fast(fn)
+            kind = fn.kind
             if kind == "AggregateExpression":
                 if fn.isDistinct():
                     raise SubstraitError("DISTINCT window aggregates unsupported")
                 inner = fn.aggregateFunction()
-                name = ops.CATALYST_AGG_TO_NAME.get(inner.prettyName())
+                name = ops.CATALYST_AGG_TO_NAME.get(inner.pretty)
                 if name is None:
                     raise SubstraitError(
-                        f"unsupported window aggregate {inner.prettyName()!r}"
+                        f"unsupported window aggregate {inner.pretty!r}"
                     )
-                if inner.prettyName() in ("first", "last",
-                                          "first_value", "last_value") \
+                if inner.pretty in ("first", "last",
+                                    "first_value", "last_value") \
                         and bool(inner.ignoreNulls()):
                     # same fence as the aggregate-measure path: the flag has
                     # no Substrait encoding, and dropping it would silently
                     # return leading NULLs
                     raise SubstraitError(
-                        f"window {inner.prettyName()}(expr, ignoreNulls=true) "
+                        f"window {inner.pretty}(expr, ignoreNulls=true) "
                         "has no Substrait encoding; rewrite without ignoreNulls"
                     )
-                args = [self.rex(c, cids) for c in _seq(inner.children())]
+                args = [self.rex(c, cids) for c in inner.children()]
             elif kind in self._WINDOW_FN_NAMES:
                 name = self._WINDOW_FN_NAMES[kind]
                 if kind in ("Lag", "Lead", "NthValue") \
@@ -1076,14 +1054,14 @@ class _Producer:
                     # children[1] is the user-facing positive offset (Lag's
                     # toString/frame show the negated internal form — do NOT
                     # re-negate)
-                    children = _seq(fn.children())
+                    children = fn.children()
                     args = [self.rex(children[0], cids),
                             proto.literal("i32", int(children[1].value())),
                             self.rex(children[2], cids)]
                 elif kind == "NTile":
-                    args = [self.rex(_seq(fn.children())[0], cids)]
+                    args = [self.rex(fn.children()[0], cids)]
                 elif kind == "NthValue":
-                    children = _seq(fn.children())
+                    children = fn.children()
                     args = [self.rex(children[0], cids), self.rex(children[1], cids)]
                 else:
                     # ranking functions: Catalyst keeps the order exprs as
@@ -1096,7 +1074,7 @@ class _Producer:
             wfs.append(proto.window_function(
                 self.registry.register(name), args, lb, ub, btype
             ))
-            out_ids.append(we.exprId().id())
+            out_ids.append(we.eid)
         return proto.window_rel(crel, wfs, part, sorts), out_ids
 
     def _temporal_range_scale(self, node) -> str | None:
@@ -1123,30 +1101,28 @@ class _Producer:
         bounds stay fenced in ``_frame``: calendar months have no fixed
         microsecond width."""
         has_interval_range = False
-        for we in _seq(node.windowExpressions()):
-            if _cls_fast(we) != "Alias" or \
-                    _cls_fast(we.child()) != "WindowExpression":
+        for we in node.windowExpressions():
+            if we.kind != "Alias" or we.child().kind != "WindowExpression":
                 continue  # the main loop raises its named error
             frame = we.child().windowSpec().frameSpecification()
-            if _cls_fast(frame) != "SpecifiedWindowFrame" or \
-                    _cls(frame.frameType()) == "RowFrame$":
+            if frame.kind != "SpecifiedWindowFrame" or \
+                    frame.frameType() == "RowFrame":
                 continue
             for b in (frame.lower(), frame.upper()):
-                if _cls_fast(b) == "Literal" and \
-                        _cls(b.dataType()).startswith("DayTimeIntervalType"):
+                if b.kind == "Literal" and _day_time(b.dtype):
                     has_interval_range = True
         if not has_interval_range:
             return None
-        order = _seq(node.orderSpec())
+        order = node.orderSpec()
         if len(order) != 1:
             raise SubstraitError(
                 "interval RANGE frames require exactly one order key")
-        kt = _cls(order[0].child().dataType())
-        if kt == "TimestampType$":
+        kt = order[0].child().dtype
+        if kt == "timestamp":
             return "us"
-        if kt == "DateType$":
+        if kt == "date":
             return "days"
-        if kt == "TimestampNTZType$":
+        if kt == "timestamp_ntz":
             raise SubstraitError(
                 "interval RANGE frame over a TIMESTAMP_NTZ order key: the "
                 "unix_micros lowering would bind the session timezone into "
@@ -1158,16 +1134,16 @@ class _Producer:
 
     def _frame(self, frame,
                temporal_scale: str | None = None) -> tuple[dict, dict, str]:
-        if _cls(frame) != "SpecifiedWindowFrame":
-            raise SubstraitError(f"unsupported window frame {_cls(frame)}")
-        btype = proto.BOUNDS_ROWS if _cls(frame.frameType()) == "RowFrame$" \
+        if frame.kind != "SpecifiedWindowFrame":
+            raise SubstraitError(f"unsupported window frame {frame.kind}")
+        btype = proto.BOUNDS_ROWS if frame.frameType() == "RowFrame" \
             else proto.BOUNDS_RANGE
 
         def bound(b):
-            k = _cls(b)
-            if k in ("UnboundedPreceding$", "UnboundedFollowing$"):
+            k = b.kind
+            if k in ("UnboundedPreceding", "UnboundedFollowing"):
                 return proto.bound_unbounded()
-            if k == "CurrentRow$":
+            if k == "CurrentRow":
                 return proto.bound_current_row()
             if k == "Literal":
                 # WindowBound carries only an i64 offset. Integer-typed and
@@ -1176,16 +1152,15 @@ class _Producer:
                 # losslessly; interval bounds (date/timestamp RANGE) and
                 # fractional values (RANGE 2.5 PRECEDING) have no encoding
                 # and must fence, not round to a wrong frame
-                if "Interval" in _cls(b.dataType()):
-                    dt = _cls(b.dataType())
-                    if temporal_scale is not None and \
-                            dt.startswith("DayTimeIntervalType"):
+                dt = b.dtype
+                if dt.startswith("interval"):
+                    if temporal_scale is not None and _day_time(dt):
                         # r12: day-time interval bounds lower to an i64
                         # distance over the unix_micros/unix_date-wrapped
                         # sort key (see _temporal_range_scale) — exact,
                         # spec-conformant, NULL interval impossible post-
                         # analysis (frame bounds must be foldable non-null)
-                        us = int(str(b.value()))
+                        us = int(b.value())
                         if temporal_scale == "days":
                             if us % 86_400_000_000:
                                 raise SubstraitError(
@@ -1206,19 +1181,18 @@ class _Producer:
                         f"keys; got {dt} — use a ROWS frame or pre-bucket "
                         "the time column"
                     )
+                # integral and floating values only: a decimal value is its
+                # exact text and never counts as integral here
                 raw = b.value()
-                try:
-                    v = int(raw)
-                    lossless = (v == raw or v == float(raw))
-                except (TypeError, ValueError):
-                    lossless = False
-                if not lossless:
+                if not (isinstance(raw, (int, float)) and math.isfinite(raw)
+                        and raw == int(raw)):
                     raise SubstraitError(
                         "window frame bound must be an integral literal; "
-                        f"got {b.toString()} of {_cls(b.dataType())} "
+                        f"got {raw} of type {dt} "
                         "(interval/fractional RANGE bounds have no i64 "
                         "WindowBound encoding)"
                     )
+                v = int(raw)
                 return proto.bound_preceding(-v) if v < 0 else proto.bound_following(v)
             raise SubstraitError(f"unsupported frame bound {k}")
 
@@ -1226,15 +1200,14 @@ class _Producer:
 
     # -- expressions --------------------------------------------------------
 
-    def rex(self, e, input_ids: list[int], kind: str | None = None) -> dict:
-        if kind is None:
-            kind = _cls_fast(e)
+    def rex(self, e, input_ids: list[int]) -> dict:
+        kind = e.kind
         if self._override is not None:
-            hit = self._override(e, kind)
+            hit = self._override(e)
             if hit is not None:
                 return hit
         if kind == "AttributeReference":
-            eid = _attr_eid(e)
+            eid = e.eid
             try:
                 ordinal = input_ids.index(eid)
             except ValueError:
@@ -1249,7 +1222,7 @@ class _Producer:
             return self._literal(e)
         if kind in ("Cast", "TryCast", "AnsiCast"):
             safe = kind == "TryCast"
-            dt = e.dataType().simpleString()
+            dt = e.dtype
             if "struct<" in dt:
                 # Substrait Type.Struct carries NO field names, so a cast to
                 # a struct — top-level or nested inside an array — would
@@ -1268,7 +1241,7 @@ class _Producer:
         if kind == "CheckOverflow":  # decimal-arithmetic guard → explicit cast
             return proto.cast(
                 self.rex(e.child(), input_ids),
-                self._type(e.dataType().simpleString()),
+                self._type(e.dtype),
             )
         if kind in ("KnownFloatingPointNormalized", "NormalizeNaNAndZero",
                     "PromotePrecision", "KnownNotNull",
@@ -1276,10 +1249,10 @@ class _Producer:
             return self.rex(e.child(), input_ids)
         if kind == "CaseWhen":
             ifs = [
-                (self.rex(t._1(), input_ids), self.rex(t._2(), input_ids))
-                for t in _seq(e.branches())
+                (self.rex(c, input_ids), self.rex(v, input_ids))
+                for c, v in e.branches()
             ]
-            els = _opt(e.elseValue())
+            els = e.elseValue()
             return proto.if_then(
                 ifs, self.rex(els, input_ids) if els is not None else None
             )
@@ -1291,7 +1264,7 @@ class _Producer:
             )
         if kind == "Not":
             inner = e.child()
-            neg = ops.CATALYST_NOT_TO_NAME.get(_cls_fast(inner))
+            neg = ops.CATALYST_NOT_TO_NAME.get(inner.kind)
             if neg is not None:
                 return self._binary(neg, inner, input_ids)
             return proto.scalar_function(
@@ -1299,14 +1272,14 @@ class _Producer:
             )
         if kind == "ScalarSubquery":
             return self._scalar_subquery(e)
-        if kind == "GetStructField" and _cls_fast(e.child()) == "ScalarSubquery":
+        if kind == "GetStructField" and e.child().kind == "ScalarSubquery":
             # Spark 4 wraps subquery output in a struct access; Catalyst's
             # MergeScalarSubqueries also packs SEVERAL subqueries into one
             # struct — each field access becomes its own 1-column subquery
             return self._scalar_subquery(e.child(), int(e.ordinal()))
         if kind == "CreateArray":
             return proto.nested_list(
-                [self.rex(c, input_ids) for c in _seq(e.children())]
+                [self.rex(c, input_ids) for c in e.children()]
             )
         if kind in ("Murmur3Hash", "XxHash64"):
             # seed is a node FIELD; SQL hash()/xxhash64() always use 42 —
@@ -1318,17 +1291,17 @@ class _Producer:
             return proto.scalar_function(
                 self.registry.register(
                     "murmur3_hash" if kind == "Murmur3Hash" else "xxhash64"),
-                [self.rex(c, input_ids) for c in _seq(e.children())],
+                [self.rex(c, input_ids) for c in e.children()],
             )
         if kind == "In":
             return proto.singular_or_list(
                 self.rex(e.value(), input_ids),
-                [self.rex(x, input_ids) for x in _seq(e.list())],
+                [self.rex(x, input_ids) for x in e.list()],
             )
         if kind == "InSet":
             return self._inset(e, input_ids)
         if kind == "NamedLambdaVariable":
-            eid = _attr_eid(e)
+            eid = e.eid
             for depth, frame in enumerate(reversed(self._lambda_stack)):
                 if eid in frame:
                     return proto.scalar_function(
@@ -1346,11 +1319,11 @@ class _Producer:
             # natively by make_ym_interval on consume; date + ym stays
             # DATE, timestamp + ym stays timestamp — Spark's own rules).
             right = e.right()
-            if _cls_fast(right) != "Literal" or right.value() is None:
+            if right.kind != "Literal" or right.value() is None:
                 raise SubstraitError(
                     "timestamp/date + year-month interval requires a "
                     "literal interval to encode")
-            months = int(str(right.value()))
+            months = int(right.value())
             sign = -1 if months < 0 else 1
             y, m = divmod(abs(months), 12)
             return proto.scalar_function(
@@ -1366,12 +1339,12 @@ class _Producer:
             # a Literal.intervalDayToSecond — sign-consistent
             # (days, seconds, microseconds) decomposition.
             right = e.right()
-            # any DayTimeIntervalType start field qualifies: simpleString
+            # any DayTimeIntervalType start field qualifies: the type
             # is "interval day[ to x]" but also "interval hour/minute/
             # second[ to x]" — all carry a total-microseconds value
             # (review catch r11: the 'interval day' prefix rejected
             # INTERVAL 3 HOUR). Year-month prefixes are the other node.
-            rdt = right.dataType().simpleString()
+            rdt = right.dtype
             if rdt == "interval":
                 # CalendarIntervalType (r12, ADVICE): Spark 4.1's
                 # TimestampAddInterval also accepts it (e.g. a constant-
@@ -1384,24 +1357,16 @@ class _Producer:
                     "literal is not encodable: a calendar interval mixes "
                     "month and microsecond components (use a day-time "
                     "interval literal)")
-            if _cls(right) != "Literal" or right.value() is None or \
-                    not rdt.startswith("interval") or \
-                    rdt.startswith(("interval year", "interval month")):
+            if right.kind != "Literal" or right.value() is None or \
+                    not _day_time(rdt):
                 raise SubstraitError(
                     "timestamp + interval requires a literal day-time "
                     "interval to encode (year-month intervals shift by "
                     "calendar months and have no fixed-microsecond form)")
-            total_us = int(str(right.value()))
-            sign = -1 if total_us < 0 else 1
-            a_us = abs(total_us)
-            days, rem = divmod(a_us, 86_400_000_000)
-            secs, us = divmod(rem, 1_000_000)
             return proto.scalar_function(
                 self.registry.register("add"),
                 [self.rex(e.left(), input_ids),
-                 {"literal": {"intervalDayToSecond": {
-                     "days": sign * days, "seconds": sign * secs,
-                     "microseconds": sign * us}}}])
+                 _day_time_literal(right.value())])
         name = ops.CATALYST_HOF_TO_NAME.get(kind)
         if name is not None:
             return self._hof(name, e, input_ids)
@@ -1410,7 +1375,7 @@ class _Producer:
             return self._binary(name, e, input_ids)
         name = ops.CATALYST_UNARY_TO_NAME.get(kind)
         if name is not None:
-            children = _seq(e.children())  # generic accessor: StringTrim etc.
+            children = e.children()  # generic accessor: StringTrim etc.
             if len(children) != 1:        # have srcStr/trimStr, not child()
                 raise SubstraitError(
                     f"{kind} with {len(children)} args unsupported "
@@ -1423,10 +1388,10 @@ class _Producer:
         if name is not None:
             return proto.scalar_function(
                 self.registry.register(name),
-                [self.rex(c, input_ids) for c in _seq(e.children())],
+                [self.rex(c, input_ids) for c in e.children()],
             )
         raise SubstraitError(
-            f"unsupported expression {kind}: {e.toString()} "
+            f"unsupported expression {kind} "
             "(≡ producer.rs:606-609 catch-all)"
         )
 
@@ -1439,7 +1404,7 @@ class _Producer:
         subquery that projects only ``v_i``; the shared child aggregate
         appears once per field in the plan, and Spark's exchange reuse
         de-duplicates it at execution."""
-        if sq.outerAttrs().size() > 0:
+        if sq.outerAttrs():
             raise SubstraitError(
                 "correlated scalar subquery unsupported (only uncorrelated "
                 "subqueries have a self-contained plan to serialize)"
@@ -1449,12 +1414,12 @@ class _Producer:
         prev, self._override = self._override, None
         try:
             plan = sq.plan()
-            if field_ordinal is not None and _cls(plan) == "Project":
-                outs = _seq(plan.projectList())
-                inner = outs[0].child() if _cls(outs[0]) == "Alias" else outs[0]
-                if len(outs) == 1 and _cls(inner) == "CreateNamedStruct":
+            if field_ordinal is not None and plan.kind == "Project":
+                outs = plan.projectList()
+                inner = outs[0].child() if outs[0].kind == "Alias" else outs[0]
+                if len(outs) == 1 and inner.kind == "CreateNamedStruct":
                     crel, cids = self.rel(plan.child())
-                    vals = _seq(inner.children())[1::2]  # (name, val) pairs
+                    vals = inner.children()[1::2]  # (name, val) pairs
                     return proto.scalar_subquery(
                         proto.project_rel(crel, [self.rex(vals[field_ordinal], cids)])
                     )
@@ -1483,8 +1448,8 @@ class _Producer:
                 "exists() with followThreeValuedLogic=false (legacy conf) "
                 "has no Substrait encoding")
         args = []
-        for c in _seq(e.children()):
-            if _cls_fast(c) == "LambdaFunction":
+        for c in e.children():
+            if c.kind == "LambdaFunction":
                 args.append(self._lambda(c, input_ids))
             else:
                 args.append(self.rex(c, input_ids))
@@ -1496,7 +1461,7 @@ class _Producer:
             # declared parameter slot; consuming positionally would bind
             # the wrong columns
             raise SubstraitError("hidden LambdaFunction has no encoding")
-        params = _ids_of(lf.arguments())
+        params = [a.eid for a in lf.arguments()]
         self._lambda_stack.append(params)
         try:
             body = self.rex(lf.function(), input_ids)
@@ -1508,12 +1473,12 @@ class _Producer:
 
     def _binary(self, name: str, e, input_ids) -> dict:
         if name in ("add", "subtract", "multiply", "divide", "mod", "div"):
-            # Spark 4 arithmetic carries evalMode (LEGACY/ANSI/TRY) as a
+            # Spark 4 arithmetic carries evalMode (LEGACY/ANSI/TRY) in a
             # node FIELD, not a child: try_divide(a, b) is Divide with
             # evalMode=TRY. Producing it as plain "divide" would silently
             # swap NULL-on-error for throw-on-error — translate to the
             # try_* name (or error for the one form with no builder).
-            mode = e.evalMode().toString()
+            mode = e.evalContext().evalMode()
             if mode == "TRY":
                 tname = self._TRY_ARITH.get(name)
                 if tname is None:
@@ -1533,8 +1498,8 @@ class _Producer:
             # OOB and on NULL-free in-bounds agree — so produce that;
             # anything else (dynamic ordinal) has no faithful encoding.
             right = e.right()
-            if _cls_fast(right) == "Literal" and right.value() is not None:
-                ordinal = int(str(right.value()))
+            if right.kind == "Literal" and right.value() is not None:
+                ordinal = int(right.value())
                 if ordinal >= 0:
                     return proto.scalar_function(
                         self.registry.register("element_at"),
@@ -1551,7 +1516,7 @@ class _Producer:
                 "non-literal ordinal has no faithful Substrait encoding; "
                 "use get()/try_element_at for NULL-on-OOB semantics")
         if name == "element_at":
-            default = _opt(e.defaultValueOutOfBound())
+            default = e.defaultValueOutOfBound()
             if default is not None:
                 # split_part desugars to ElementAt(split(s, d, -1), n, '')
                 # — the OOB default is a node FIELD with no Substrait slot.
@@ -1569,16 +1534,16 @@ class _Producer:
                 # lenient element_at agree (negative n counts from the
                 # end on both sides of the boundary).
                 right = e.right()
-                if not e.left().dataType().simpleString().startswith("array"):
+                if not e.left().dtype.startswith("array"):
                     raise SubstraitError(
                         "element_at with an out-of-bounds default is only "
                         "encodable over arrays")
-                if _cls_fast(right) != "Literal" or right.value() is None:
+                if right.kind != "Literal" or right.value() is None:
                     raise SubstraitError(
                         "element_at with an out-of-bounds default needs a "
                         "literal non-null ordinal to encode (the in-bounds "
                         "guard must be computable)")
-                ordinal = int(str(right.value()))
+                ordinal = int(right.value())
                 if ordinal == 0:
                     raise SubstraitError(
                         "element_at(arr, 0, default) always errors in "
@@ -1589,8 +1554,7 @@ class _Producer:
                 return proto.if_then(
                     [
                         (proto.scalar_function(reg("is_null"), [arr]),
-                         proto.null_literal(self._type(
-                             e.dataType().simpleString()))),
+                         proto.null_literal(self._type(e.dtype))),
                         (proto.scalar_function(reg("gte"), [
                             proto.scalar_function(reg("size"), [arr]),
                             proto.literal("i32", abs(ordinal))]),
@@ -1610,11 +1574,11 @@ class _Producer:
             # rebuilds it as a \Q..\E-quoted regex split, which needs the
             # delimiter as a plan-time string — fence what can't rebuild
             right = e.right()
-            if _cls_fast(right) != "Literal" or right.value() is None:
+            if right.kind != "Literal" or right.value() is None:
                 raise SubstraitError(
                     "string_split (split_part) requires a literal non-null "
                     "delimiter to encode")
-            if str(right.value()) == "" or "\\E" in str(right.value()):
+            if right.value() == "" or "\\E" in right.value():
                 raise SubstraitError(
                     "string_split delimiter is empty or contains \\E — "
                     "not regex-quotable for the consume-side rebuild")
@@ -1625,9 +1589,8 @@ class _Producer:
             # (consumer.rs:56-59, producer.rs:305-308) — the consumer
             # re-prepends "(?i)" on rebuild.
             right = e.right()
-            if _cls_fast(right) == "Literal":
+            if right.kind == "Literal":
                 pat = right.value()
-                pat = None if pat is None else str(pat)
                 if pat is not None and pat.startswith("(?i)") \
                         and "(?" not in pat[4:]:
                     iname = name.replace("match", "imatch")
@@ -1643,11 +1606,7 @@ class _Producer:
 
     def _inset(self, e, input_ids) -> dict:
         child = e.child()
-        dt = child.dataType().simpleString()
-        it = e.hset().iterator()
-        options = []
-        while it.hasNext():
-            options.append(self._literal_value(it.next(), dt))
+        options = [self._literal_value(v, child.dtype) for v in e.hset()]
         # stable plan bytes: InSet's hash-set iteration order is unspecified
         options.sort(key=lambda d: str(sorted(d["literal"].items())))
         return proto.singular_or_list(self.rex(child, input_ids), options)
@@ -1655,38 +1614,26 @@ class _Producer:
     # -- literals (producer.rs:576-655) -------------------------------------
 
     def _literal(self, e) -> dict:
-        dt = e.dataType().simpleString()
+        dt = e.dtype
         v = e.value()
         if v is None:
             return proto.null_literal(self._type(dt))
         if dt.startswith("array<") and dt.endswith(">"):
             # constant-folded array literal (e.g. array('x') under concat)
-            # → Expression.Nested.List of element literals; ArrayData
-            # implements the same SpecializedGetters as InternalRow, so
-            # the LocalRelation getter table is reused
+            # → Expression.Nested.List of element literals
             inner = dt[6:-1]
-            getter = self._ROW_GETTERS.get(inner)
-            dm = _DECIMAL_RE.match(inner)
-            if getter is None and dm:
-                # same decimal fallback as the LocalRelation rows above
-                getter = lambda a, i, _dm=dm: a.getDecimal(  # noqa: E731
-                    i, int(_dm.group(1)), int(_dm.group(2))
-                ).toJavaBigDecimal()
-            if getter is None:
-                raise SubstraitError(
-                    f"unsupported array-literal element type {inner!r}")
-            if v.numElements() == 0:
+            if not v:
                 raise SubstraitError(
                     "empty array literal has no element to carry its type "
                     "through Nested.List; rewrite without the fold")
-            return proto.nested_list([
-                proto.null_literal(self._type(inner))
-                if v.isNullAt(i) else self._literal_value(getter(v, i), inner)
-                for i in range(v.numElements())
-            ])
+            return proto.nested_list(
+                [self._literal_value(x, inner) for x in v])
         return self._literal_value(v, dt)
 
     def _literal_value(self, v, dt: str) -> dict:
+        """One value of Spark type ``dt`` as the encoder writes it: numbers,
+        booleans and strings as themselves, binary as base64 text, decimals
+        as exact plain text, intervals as their total count."""
         if v is None:
             return proto.null_literal(self._type(dt))
         if dt == "tinyint":
@@ -1704,7 +1651,7 @@ class _Producer:
         if dt == "double":
             return proto.literal("fp64", float(v))
         if dt == "string":
-            return proto.literal("string", v if isinstance(v, str) else v.toString())
+            return proto.literal("string", v)
         if dt == "date":  # Date32 epoch-days (producer.rs:594)
             return proto.literal("date", int(v))
         if dt == "timestamp":  # UTC instant, micros
@@ -1712,16 +1659,14 @@ class _Producer:
         if dt == "timestamp_ntz":
             return proto.literal("timestamp", int(v))
         if dt == "binary":
-            return proto.literal("binary", base64.b64encode(bytes(v)).decode("ascii"))
+            return proto.literal("binary", v)
+        if dt == "interval day to second":  # total microseconds
+            return _day_time_literal(int(v))
         m = _DECIMAL_RE.match(dt)
         if m:
             # 16-byte little-endian two's-complement unscaled value, exactly the
             # reference's i128::to_le_bytes wire format (producer.rs:585-589)
             precision, scale = int(m.group(1)), int(m.group(2))
-            if not isinstance(v, decimal.Decimal):
-                # org.apache.spark.sql.types.Decimal → java BigDecimal, which
-                # py4j auto-converts to python decimal.Decimal
-                v = v.toJavaBigDecimal()
             # exact: the default context rounds to 28 significant digits
             unscaled = int(decimal.Decimal(v).scaleb(
                 scale, decimal.Context(prec=80)))

@@ -1156,25 +1156,31 @@ def test_timestamp_interval_arithmetic_roundtrips(spark):
         to_substrait_plan(cal)
 
 
-def test_batched_walk_primitives_match_reflective_walk(spark):
-    """r18 producer batching (guide §4 driver boundary) rests on two JVM
-    renders the fast paths parse instead of per-field py4j calls:
+def _jseq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
 
-    1. ``productPrefix`` == ``getClass().getSimpleName()`` for every
-       Catalyst plan/expression node (compiler-generated for case
-       classes; ``_cls_fast`` falls back on empty/missing, but a
-       DIVERGING non-empty prefix would misroute dispatch — pin it).
-    2. ``Attribute.toString`` == ``name#id`` (+``L`` iff bigint), so
-       ``_parse_attr_strs``/``_attr_eid`` recover names and exprIds
-       exactly, including names that contain ``#7L`` themselves.
 
-    Walk a corpus of optimized plans covering scans, filters, aggregates,
-    windows, joins, generators, lambdas and pathological column names and
-    assert both invariants node by node.
+def test_plan_dump_matches_a_reflective_walk(spark):
+    """The producer reads Catalyst's optimized plan as one JSON dump
+    (``plans/PlanEncoder.java``) instead of walking it over py4j. Walk a
+    corpus of optimized plans over py4j beside the dump and pin, node by
+    node, what the translation reads from it:
+
+    1. the kind: productPrefix, the class's simple name (case objects such
+       as ``UnboundedPreceding`` drop the trailing ``$``);
+    2. each expression's type as ``dataType().catalogString()``;
+    3. each named expression's exprId;
+    4. each plan's output (name, exprId, type) and its references.
+
+    The corpus covers scans, filters, aggregates, windows, joins,
+    generators, lambdas and names holding ``#7L``-like tails.
     """
-    from datafusion_substrait_spark.plans.producer import (
-        _ATTR_SEP, _attr_eid, _cls, _cls_fast, _parse_attr_strs, _seq)
+    from datafusion_substrait_spark.plans.producer import _Node, _read
 
+    jvm = spark._jvm
+    expression, seq, tuple2 = (jvm.java.lang.Class.forName(c) for c in (
+        "org.apache.spark.sql.catalyst.expressions.Expression",
+        "scala.collection.Seq", "scala.Tuple2"))
     sqls = [
         "SELECT l_returnflag, l_linestatus, sum(l_quantity) AS s, "
         "avg(l_extendedprice) AS a, count(*) AS c FROM lineitem "
@@ -1189,136 +1195,204 @@ def test_batched_walk_primitives_match_reflective_walk(spark):
         "filter(sequence(1, 4), v -> v % 2 = 0) AS evens",
         "SELECT o_orderpriority, count(DISTINCT o_custkey) AS d "
         "FROM orders GROUP BY o_orderpriority",
-        # pathological names: embedded #id[L]-lookalikes, separator-free
+        "SELECT o_orderstatus, o_orderpriority, count(*) AS n "
+        "FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)",
+        # pathological names: embedded #id[L]-lookalikes
         "SELECT l_orderkey AS `weird#7L`, l_orderkey + 1 AS `a#3`, "
         "CAST(l_orderkey AS BIGINT) AS big FROM lineitem LIMIT 5",
     ]
+    counts = {"nodes": 0, "attrs": 0}
 
-    checked_nodes = 0
-    checked_attrs = 0
+    def same_kind(j, node):
+        counts["nodes"] += 1
+        simple = j.getClass().getSimpleName()
+        assert simple in (node.kind, node.kind + "$"), (simple, node.kind)
 
-    def check_cls(x):
-        # case CLASSES must agree exactly; case OBJECTS (window frame
-        # bounds like UnboundedPreceding$) drop the trailing $ in
-        # productPrefix — the producer deliberately keeps the reflective
-        # _cls at every site where a case object can appear (frameType,
-        # frame bounds, dataTypes), so the only tolerated divergence is
-        # exactly that $ suffix
-        slow, fast = _cls(x), _cls_fast(x)
-        assert fast == slow or slow == fast + "$"
+    def walk_expr(j, node):
+        same_kind(j, node)
+        try:
+            t = j.dataType().catalogString()
+        except Exception:  # WindowSpecDefinition and the like have none
+            t = None
+        assert node.dtype == t, (node.kind, node.dtype, t)
+        if node.kind in ("AttributeReference", "Alias", "NamedLambdaVariable"):
+            assert node.eid == j.exprId().id()
+        kids = _jseq(j.children())
+        assert len(kids) == len(node.children()), node.kind
+        for jc, c in zip(kids, node.children()):
+            walk_expr(jc, c)
 
-    def walk_expr(e):
-        nonlocal checked_nodes
-        checked_nodes += 1
-        check_cls(e)
-        for c in _seq(e.children()):
-            walk_expr(c)
+    def pair(jv, v):
+        """Walk the expressions of one constructor field."""
+        if isinstance(v, list):
+            if seq.isInstance(jv):
+                jv = _jseq(jv)
+            elif tuple2.isInstance(jv):
+                jv = [jv._1(), jv._2()]
+            else:  # a value the encoder writes as a list (JoinHint)
+                return
+            for jx, x in zip(jv, v):
+                pair(jx, x)
+        elif isinstance(v, _Node) and "#o" not in v._d:
+            if jv.getClass().getSimpleName() == "Some":
+                jv = jv.get()
+            if expression.isInstance(jv):
+                walk_expr(jv, v)
 
-    def walk(n):
-        nonlocal checked_nodes, checked_attrs
-        checked_nodes += 1
-        check_cls(n)
-        out = n.output()
-        parsed = _parse_attr_strs(out.mkString(_ATTR_SEP))
-        attrs = _seq(out)
-        assert parsed is not None and len(parsed) == len(attrs)
-        for (pname, peid), a in zip(parsed, attrs):
-            checked_attrs += 1
-            assert pname == a.name()
-            assert peid == a.exprId().id()
-            assert _attr_eid(a) == a.exprId().id()
-        for e in _seq(n.expressions()):
-            walk_expr(e)
-        for c in _seq(n.children()):
-            walk(c)
+    def walk(j, node):
+        same_kind(j, node)
+        out = _jseq(j.output())
+        assert node.output() == [
+            [a.name(), a.exprId().id(), a.dataType().catalogString()]
+            for a in out]
+        counts["attrs"] += len(out)
+        assert sorted(node.references()) == sorted(
+            a.exprId().id() for a in _jseq(j.references().toSeq()))
+        for name, v in node._d.items():
+            if not name.startswith("#") and name != "child":
+                pair(getattr(j, name)(), v)
+        kids = _jseq(j.children())
+        assert len(kids) == len(node.children())
+        for jc, c in zip(kids, node.children()):
+            walk(jc, c)
 
     for sql in sqls:
-        walk(spark.sql(sql)._jdf.queryExecution().optimizedPlan())
-    assert checked_nodes > 150 and checked_attrs > 40
+        df = spark.sql(sql)
+        names, node = _read(df)
+        assert names == df.columns
+        walk(df._jdf.queryExecution().optimizedPlan(), node)
+    assert counts["nodes"] > 150 and counts["attrs"] > 40
 
 
-def test_ids_of_falls_back_on_separator_collision(spark, tmp_path,
-                                                  monkeypatch):
-    """A column name CONTAINING the mkString separator plus a #digits
-    tail mis-splits into fragments that individually match the attr
-    regex; the size cross-check in ``_attrs_of`` must detect it and the
-    per-attribute walk must decide (r18 review hardening) — at every site
-    that reads an attribute Seq through it: scan schema, scan mask,
-    grouping ids and grouping sets. The per-attribute walk must also
-    produce exactly the plans the parse does, and the scan schema's
-    python-side type render must equal the JVM's per-attribute one."""
-    import __spark_entry__ as entry
+def test_awkward_names_survive_the_plan_dump(spark, tmp_path):
+    """Names travel inside the plan dump's JSON text, which is ASCII-only
+    and fetched in parts of under 8 KB. Names holding the old attribute
+    separator ``\x01``, ``#7L``-like tails, quotes, backslashes and
+    non-ASCII text — one long enough that part boundaries fall inside its
+    escapes — come back exactly: the plan names the columns the JVM
+    reports, producing twice gives the same plan, and the roundtrip
+    equals the direct run as a scan, a projection, a GROUP BY and a
+    ROLLUP. The scan schema's types equal the JVM's per-attribute render
+    on that table and the 10 test tables."""
+    import re
+
     from pyspark.sql import functions as F
-    from datafusion_substrait_spark.plans import producer
-    from datafusion_substrait_spark.plans.producer import (
-        _ATTR_SEP, _Producer, _attrs_of, _cls, _ids_of, _parse_attr_strs,
-        _seq)
+    from datafusion_substrait_spark.plans.producer import (_encoder,
+                                                           _Producer, _read)
     from datafusion_substrait_spark.plans.types import spark_type_to_substrait
     from datafusion_substrait_spark.sources import catalog
-    from tests.test_sql_fuzz import Gen
+    from tests.conftest import schema_of
 
-    evil = "a\x01b#3"  # separator inside the name, fake id tail
-    df = spark.range(2).select(
-        F.col("id").alias(evil), (F.col("id") + 1).alias("ok"))
-    out = df._jdf.queryExecution().optimizedPlan().output()
-    want = [a.exprId().id() for a in _seq(out)]
-    assert _ids_of(out) == want
+    def read_rels(rel):
+        if isinstance(rel, dict):
+            if "baseSchema" in rel:
+                yield rel
+            for v in rel.values():
+                yield from read_rels(v)
+        elif isinstance(rel, list):
+            for v in rel:
+                yield from read_rels(v)
 
-    # every fragment of these names matches the attr regex, so only the
-    # size check can tell a mis-split from more attributes
+    def check_names(df):
+        plan = to_substrait_plan(df)
+        assert plan["relations"][0]["root"]["names"] == df.columns
+        assert to_substrait_plan(df) == plan
+        for read in read_rels(plan):
+            table = read["namedTable"]["names"][-1]
+            assert read["baseSchema"]["names"] == spark.table(table).columns
+        rt = roundtrip(df)
+        assert_same_result(df, rt)
+        assert schema_of(rt) == schema_of(df)
+
+    evil = "a\x01b#3"  # the old separator inside a name, fake id tail
+    check_names(spark.range(2).select(
+        F.col("id").alias(evil), (F.col("id") + 1).alias("ok")))
+
     split, split2 = "k#1\x01g#2", "p#7L\x01q#9"
-    path = str(tmp_path / "collide")
-    spark.sql(f"""
-        SELECT id AS `{split2}`, id % 2 AS `{split}`, id * 1.5 AS v,
-               CAST(id AS TINYINT) AS i8, CAST(id AS SMALLINT) AS i16,
-               CAST(id AS INT) AS i32, CAST(id AS FLOAT) AS f32,
-               CAST(id AS DECIMAL(7,2)) AS dec, id > 2 AS b,
-               CAST(id AS STRING) AS s, CAST(CAST(id AS STRING) AS BINARY)
-                   AS bin,
-               date_add(DATE '2020-01-01', CAST(id AS INT)) AS d,
-               TIMESTAMP '2020-01-01 00:00:00' AS ts,
-               TIMESTAMP_NTZ '2020-01-01 00:00:00' AS tsn,
-               array(CAST(id AS INT), 1) AS arr,
-               named_struct('x', CAST(id AS INT), 'y', 'z') AS st
-        FROM range(6)
-    """).write.parquet(path)
-    catalog.register_parquet(spark, "collide", path)
+    quoted = "q'\"\\x"
+    accents = "é€😀ü"
+    wide = "é€😀\x01\"\\" * 400  # about 17 KB once escaped for py4j
+    path = str(tmp_path / "awkward")
+    spark.range(6).select(
+        F.col("id").alias(split2), (F.col("id") % 2).alias(split),
+        (F.col("id") * 1.5).alias(quoted), F.col("id").cast("string")
+        .alias(accents), (F.col("id") % 3).alias(wide),
+    ).write.parquet(path)
+    catalog.register_parquet(spark, "awkward", path)
 
-    scan = spark.table("collide")._jdf.queryExecution().optimizedPlan()
-    attrs = _seq(scan.output())
-    assert len(_parse_attr_strs(scan.output().mkString(_ATTR_SEP))) \
-        == len(attrs) + 2
-    assert _attrs_of(scan.output()) == \
-        [(a.name(), a.exprId().id()) for a in attrs]
+    def q(name):
+        return "`" + name.replace("`", "``") + "`"
 
-    collide_sqls = [
-        "SELECT * FROM collide",
-        f"SELECT `{split}`, `{split2}`, v FROM collide",
-        f"SELECT `{split}`, sum(v) AS s FROM collide GROUP BY `{split}`",
-        f"SELECT `{split}`, `{split2}`, sum(v) AS s FROM collide "
-        f"GROUP BY ROLLUP(`{split}`, `{split2}`)",
+    sqls = [
+        "SELECT * FROM awkward",
+        f"SELECT {q(split)}, {q(quoted)}, {q(accents)}, {q(wide)} "
+        "FROM awkward",
+        f"SELECT {q(split)}, {q(wide)}, sum({q(quoted)}) AS s FROM awkward "
+        f"GROUP BY {q(split)}, {q(wide)}",
+        f"SELECT {q(split)}, {q(split2)}, sum({q(quoted)}) AS s "
+        f"FROM awkward GROUP BY ROLLUP({q(split)}, {q(split2)})",
     ]
-    for sql in collide_sqls:
-        check(spark, sql)
+    for sql in sqls:
+        check_names(spark.sql(sql))
 
-    for name in ("collide", "region", "nation", "customer", "supplier",
+    # the wide name does split: some part ends inside an escape
+    parts = _encoder(spark).optimizedPlan(spark.sql(sqls[1])._jdf)
+    count = int(parts.part(0).partition(":")[0])
+    assert count > 2
+    tails = [parts.part(i) for i in range(count - 1)]
+    assert any(re.search(r"(\\u[0-9a-f]{0,3}|[^\\](\\\\)*\\)\Z", t)
+               for t in tails)
+
+    for name in ("awkward", "region", "nation", "customer", "supplier",
                  "part", "orders", "lineitem", "events", "documents",
                  "embeddings"):
-        node = spark.table(name)._jdf.queryExecution().optimizedPlan()
-        assert _cls(node) == "LogicalRelation"
-        attrs = _seq(node.output())
+        _, node = _read(spark.table(name))
+        assert node.kind == "LogicalRelation"
+        attrs = _jseq(spark.table(name)._jdf.queryExecution()
+                      .optimizedPlan().output())
         assert _Producer()._scan_schema(node) == (
             [a.name() for a in attrs],
-            [spark_type_to_substrait(a.dataType().simpleString())
+            [spark_type_to_substrait(a.dataType().catalogString())
              for a in attrs],
             [a.exprId().id() for a in attrs])
 
-    declared = {"q01_pricing_summary": entry._Q01, **entry._SQL}
-    declared = [declared[n] for n in entry.queries() if n in declared]
-    assert len(declared) == 17
-    dfs = [spark.sql(s) for s in
-           declared + [Gen(seed).query() for seed in range(200)]
-           + collide_sqls]
-    parsed = [to_substrait_plan(d) for d in dfs]
-    monkeypatch.setattr(producer, "_parse_attr_strs", lambda s: None)
-    assert [to_substrait_plan(d) for d in dfs] == parsed
+
+@pytest.mark.parametrize("literal", [
+    "INTERVAL '3 04:05:06.789' DAY TO SECOND",
+    "INTERVAL '-3 04:05:06.789' DAY TO SECOND",
+    "INTERVAL '0 00:00:00.000001' DAY TO SECOND",
+    "INTERVAL '-0 00:00:00.25' DAY TO SECOND",
+])
+def test_day_time_interval_literal_roundtrips(spark, literal):
+    """A day-time interval literal is produced from its total microseconds
+    as a sign-consistent Literal.intervalDayToSecond, whatever its sign and
+    however small its sub-second part; rows and schema equal the direct
+    run."""
+    from tests.conftest import schema_of
+
+    df = spark.sql(f"SELECT o_orderkey, {literal} AS dt FROM orders "
+                   "WHERE o_orderkey < 40")
+    rt = roundtrip(df)
+    assert_same_result(df, rt)
+    assert schema_of(rt) == schema_of(df)
+
+
+def test_struct_wider_than_the_tostring_limit_roundtrips(spark):
+    """Types are read as ``catalogString``, which is never truncated:
+    ``simpleString`` cuts a struct of more than
+    ``spark.sql.debug.maxToStringFields`` (25) fields to "... 5 more
+    fields". A 30-field struct as a null literal and as a VALUES column
+    keeps its rows and schema."""
+    from tests.conftest import schema_of
+
+    struct = "STRUCT<" + ", ".join(f"f{i} INT" for i in range(30)) + ">"
+    for sql in (
+        f"SELECT CAST(NULL AS {struct}) AS s, n_name FROM nation",
+        f"SELECT * FROM VALUES (CAST(NULL AS {struct}), 1), "
+        f"(CAST(NULL AS {struct}), 2) AS t(s, k)",
+    ):
+        df = spark.sql(sql)
+        rt = roundtrip(df)
+        assert_same_result(df, rt)
+        assert schema_of(rt) == schema_of(df)
+        assert schema_of(df)[0][1].count(":int") == 30
